@@ -58,15 +58,15 @@ object SubmitMain {
             Trigger.AvailableNow()
           else Trigger.ProcessingTime(
             spark.conf.getOption("spark.graft.triggerMs").getOrElse("0").toLong)
-        val salt = spark.conf.getOption("spark.graft.saltParts").map(_.toInt)
         val metrics = new StreamJob.EmitMetricsListener
         spark.streams.addListener(metrics)
         val q = StreamJob.start(spark, events, outDir, ckDir, keypass,
           watermarkDelay = spark.conf
             .getOption("spark.graft.watermark").getOrElse("10 seconds"),
           sessionGap = spark.conf
-            .getOption("spark.graft.sessionGap").getOrElse("30 minutes"),
-          trigger = trigger, saltParts = salt)
+            .getOption("spark.graft.sessionGap")
+            .getOrElse(SpadlStream.DefaultSessionGap),
+          trigger = trigger, metrics = Some(metrics))
         q.awaitTermination()
 
       case "batch" =>

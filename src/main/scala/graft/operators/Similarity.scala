@@ -347,15 +347,10 @@ object Similarity {
     // a single stage (SinglePartition satisfies all distributions); a
     // 100-TB pair graph grows it linearly. The count() is a cheap scan of
     // the already-checkpointed edges.
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit = if (verbose)
-      println(f"[cc +${(System.nanoTime() - t0) / 1e9}%.2fs] $what")
     val m = edges.count()
     val p = math.max(1L, math.min(
       edges.sparkSession.sparkContext.defaultParallelism.toLong,
       m / 1000000L + 1L)).toInt
-    mark(s"edges=$m partitions=$p")
     def part(df: DataFrame, key: String): DataFrame =
       if (p == 1) df.coalesce(1) else df.repartition(p, col(key))
     // LAZY checkpoints throughout the loop: the convergence-probe action
@@ -415,7 +410,6 @@ object Similarity {
         val cur = lblSum(next)
         converged = cur == prev
         prev = cur
-        mark(s"round $iter lblSum=$cur converged=$converged")
       }
       labels = next
     }

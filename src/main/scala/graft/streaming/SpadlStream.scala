@@ -117,6 +117,14 @@ object SpadlStream {
     }
   }
 
+  /** Default session gap: twice the per-period offset of the event-time
+    * axis ((period-1)*3600 s in [[toStreamEvents]]). An Opta half-time
+    * leaves about an hour without events on that axis, so any shorter gap
+    * lets other games' watermark close a game at half-time, and the second
+    * half reopens a fresh session whose `action_idx` restarts.
+    */
+  val DefaultSessionGap = "2 hours"
+
   /** Raw-event stream derived from token docs: the deterministic chunker
     * used by fixtures/benches (production would readStream the Iceberg
     * sequence table directly in this shape).
@@ -236,7 +244,6 @@ object SpadlStream {
       lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None)(
       key: String, rows: Iterator[StreamEvent],
       state: GroupState[GameBuf]): Iterator[ValuedAction] = {
-    val dbg = sys.env.get("GRAFT_STATE_DEBUG").contains(key)
     if (state.hasTimedOut) {
       // session close: flush the remainder, drop the state
       val buf = state.get
@@ -246,9 +253,6 @@ object SpadlStream {
           optaEmit(key, buf.home, events, buf.emittedActions,
             buf.droppedPrefix, buf.carry, finalFlush = true).out
         else instatValued(key, buf.home, events)
-      if (dbg) println(s"[state $key] TIMEOUT buffered=${events.size} " +
-        s"emitted=${buf.emittedActions} dp=${buf.droppedPrefix} " +
-        s"flush=${out.map(_.action_idx).mkString(",")}")
       state.remove()
       return out.iterator
     }
@@ -331,9 +335,6 @@ object SpadlStream {
           optaEmit(key, home, events, buf0.emittedActions,
             buf0.droppedPrefix, buf0.carry, finalFlush = true).out
         else instatValued(key, home, events)
-      if (dbg) println(s"[state $key] IMMEDIATE CLOSE wm=$wm " +
-        s"buffered=${events.size} emitted=${buf0.emittedActions} " +
-        s"flush=${out.map(_.action_idx).mkString(",")}")
       state.remove()
       return out.iterator
     }
@@ -351,11 +352,6 @@ object SpadlStream {
       if (safe.size >= 2 && safeGrew) {
         val r = optaEmit(key, home, safe, buf0.emittedActions,
           buf0.droppedPrefix, buf0.carry, finalFlush = false)
-        if (dbg) println(s"[state $key] wm=$wm frontier=$frontier " +
-          s"safe=${safe.size} total=${events.size} fresh=${freshV.size} " +
-          s"emitted ${buf0.emittedActions}->${r.emittedActions} " +
-          s"keepFrom=${r.keepFrom} dp=${r.newDroppedPrefix} " +
-          s"out=${r.out.map(_.action_idx).mkString(",")}")
         val keep = safe.sortBy(optaSortKey).drop(r.keepFrom) ++
           events.filter(_.ts >= frontier)
         state.update(GameBuf.build(provider, home, r.emittedActions,
@@ -381,7 +377,7 @@ object SpadlStream {
   def valuedActions(spark: SparkSession, events: Dataset[StreamEvent],
       keypass: Option[DataFrame] = None,
       watermarkDelay: String = "10 seconds",
-      sessionGap: String = "10 minutes",
+      sessionGap: String = DefaultSessionGap,
       lateCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None,
       emissionLagOverride: Option[Long] = None)

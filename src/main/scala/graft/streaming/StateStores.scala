@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * RocksDB value wants (one get/put per key per batch, no per-element
   * codec work).
   *
-  * Selection knob: `GRAFT_STATE=rocksdb` (benches, RunStream) or an
+  * Selection knob: `GRAFT_STATE=rocksdb` (RunStream) or an
   * explicit conf. The provider is a per-QUERY setting read at stream
   * start from the session conf, so it composes with an existing
   * SparkSession via `spark.conf.set` — no context restart needed.
@@ -29,7 +29,7 @@ object StateStores {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Production-tuned RocksDB configuration. Two knobs matter enormously
-    * once state is large (measured: the 2-core StreamBench run went from
+    * once state is large (measured: a 2-core stream drain went from
     * >580 s — timeout — to normal wall with these on a 9.8M-row join
     * state):
     *  - changelog checkpointing: commit ships only the batch's changelog

@@ -2,11 +2,10 @@ package graft.streaming
 
 import graft.model.ValuedAction
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
-/** End-to-end streaming job wiring: salted repartition -> state ->
-  * exactly-once sink + checkpoint + emitted-row metrics.
+/** End-to-end streaming job wiring: state -> exactly-once sink +
+  * checkpoint + emitted-row metrics.
   */
 object StreamJob {
 
@@ -47,16 +46,6 @@ object StreamJob {
         e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** Salted repartition of the stateless stage (SURVEY.md §4): hot
-    * `source`/hot-team skew is defused by spreading rows over
-    * hash(doc_id, seq) — a pure-function spread that keeps NO affinity
-    * requirement, because the stateful stage re-keys by doc_id itself
-    * (groupByKey performs the correctness-critical hash by key).
-    */
-  def saltedSpread(events: Dataset[SpadlStream.StreamEvent], parts: Int)
-      : Dataset[SpadlStream.StreamEvent] =
-    events.repartition(parts, pmod(hash(col("doc_id"), col("seq")), lit(parts)))
-
   /** Start the full job: events stream -> valued actions -> exactly-once
     * sink, resumable from `checkpointDir`. An `outDir` of the form
     * `iceberg:<catalog.db.table>` routes each micro-batch through
@@ -68,9 +57,8 @@ object StreamJob {
       outDir: String, checkpointDir: String,
       keypass: Option[org.apache.spark.sql.DataFrame] = None,
       watermarkDelay: String = "10 seconds",
-      sessionGap: String = "10 minutes",
+      sessionGap: String = SpadlStream.DefaultSessionGap,
       trigger: Trigger = Trigger.AvailableNow(),
-      saltParts: Option[Int] = None,
       metrics: Option[EmitMetricsListener] = None): StreamingQuery = {
     val sinkWrite: (org.apache.spark.sql.DataFrame, Long) => Unit =
       if (outDir.startsWith("iceberg:")) {
@@ -80,10 +68,6 @@ object StreamJob {
         val sink = new ExactlyOnceSink(outDir)
         sink.write
       }
-    // optional salted spread of the STATELESS stage for hot-source input
-    // skew; the stateful stage re-keys by doc_id, so correctness is
-    // unaffected (asserted by the slicing-equivalence tests)
-    val spread = saltParts.map(saltedSpread(events, _)).getOrElse(events)
     // telemetry accumulators, surfaced per batch by the metrics listener
     val lateAcc = metrics.map(_ =>
       spark.sparkContext.longAccumulator("graft.late_rows"))
@@ -91,7 +75,7 @@ object StreamJob {
       spark.sparkContext.longAccumulator("graft.lost_kp_upgrades"))
     metrics.foreach { m => m.lateAcc = lateAcc; m.lostAcc = lostAcc }
     val valued: Dataset[ValuedAction] =
-      SpadlStream.valuedActions(spark, spread, keypass, watermarkDelay,
+      SpadlStream.valuedActions(spark, events, keypass, watermarkDelay,
         sessionGap, lateCounter = lateAcc, lostUpgrades = lostAcc)
     valued.writeStream
       .outputMode("append")

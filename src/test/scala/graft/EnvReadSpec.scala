@@ -1,0 +1,34 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Regression guard against env-var switches in the engine. Environment
+  * reads belong to the entry points that size a run (`Bench`, `Verify`,
+  * `SubmitMain`) and to the state-store provider selection; anywhere else
+  * an env switch is hidden configuration that no test or benchmark sets,
+  * and in Scala 2.13 each `sys.env` call also copies the whole environment
+  * into a new Map, which costs real time on a per-key or per-row path.
+  */
+class EnvReadSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala/graft")
+  private val allowed = Set("Bench.scala", "Verify.scala", "SubmitMain.scala",
+    "streaming/StateStores.scala")
+  private val envRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
+
+  test("only the allow-listed sources read environment variables") {
+    assert(Files.isDirectory(root), s"source root $root not found")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    assert(files.nonEmpty)
+    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
+    val bad = for {
+      f <- files.sortBy(rel) if !allowed(rel(f))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if envRead.findFirstIn(line).isDefined
+    } yield s"${rel(f)}:${i + 1}: ${line.trim}"
+    assert(bad.isEmpty, s"\nenv read outside the allow-list:\n${bad.mkString("\n")}")
+  }
+}

@@ -61,11 +61,13 @@ abstract class StreamingContractSpec extends AnyFunSuite {
 
   private def runStream(games: Seq[FixtureGen.Game], slices: Int,
       withKeypass: Boolean = false,
-      lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None)
+      lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None,
+      sessionGap: String = "10 minutes",
+      baseOf: FixtureGen.Game => Long = _ => Base)
       : Seq[ValuedAction] = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, Base))
+    val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, baseOf(g)))
       .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
     val mem = MemoryStream[SpadlStream.StreamEvent]
     val kpMem = MemoryStream[(String, Int, String, Timestamp)]
@@ -73,7 +75,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       "event_time")
     val out = SpadlStream.valuedActions(spark, mem.toDS(),
       if (withKeypass) Some(kpDf) else None,
-      watermarkDelay = "10 seconds", sessionGap = "10 minutes",
+      watermarkDelay = "10 seconds", sessionGap = sessionGap,
       lostUpgrades = lostUpgrades)
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("stream_out")
@@ -121,6 +123,25 @@ abstract class StreamingContractSpec extends AnyFunSuite {
         assert(a == b, s"slices=$slices mismatch at ${key(a)}")
       }
     }
+  }
+
+  test("default session gap keeps an Opta game open across half-time") {
+    // Two full Opta games whose clocks start 40 min apart: while the first
+    // game sits in its hour-long half-time silence on the event-time axis,
+    // the second game's first half drives the watermark on. A gap shorter
+    // than that silence closes the first game at half-time and its second
+    // half restarts action_idx.
+    val games = FixtureGen.corpus(2, 500)
+    assert(games.forall(_.doc.source == "opta"))
+    val truth = batchTruth(games.map(_.copy(keypasses = Nil))).sortBy(key)
+    assert(truth.map(_.game_id).distinct.forall(id =>
+      truth.exists(a => a.game_id == id && a.period_id == 2)),
+      "fixture games must reach the second half")
+    val got = runStream(games, 12, sessionGap = SpadlStream.DefaultSessionGap,
+      baseOf = g => Base + games.indexOf(g) * 40 * 60000L)
+    assert(got.map(key).distinct.size == got.size,
+      "duplicate (game_id, action_idx) keys")
+    assert(got.sortBy(key) == truth)
   }
 
   test("stream-stream keypass join sets assist/keypass flags like batch") {
@@ -318,10 +339,9 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/*")
       .as[SpadlStream.StreamEvent]
-    // phase 1: process first half, then "crash" (stop) — with the salted
-    // spread of the stateless stage enabled (output must be unaffected)
+    // phase 1: process first half, then "crash" (stop)
     val q1 = StreamJob.start(spark, stream, outDir, ckDir,
-      trigger = Trigger.AvailableNow(), saltParts = Some(5))
+      trigger = Trigger.AvailableNow())
     q1.awaitTermination(120000)
     q1.stop()
     // phase 2: second half + sentinels land, restart from checkpoint
@@ -330,7 +350,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     spark.createDataset(Seq(sentinel(2, 31))).write.parquet(s"$srcDir/p4")
     spark.createDataset(Seq(sentinel(3, 32))).write.parquet(s"$srcDir/p5")
     val q2 = StreamJob.start(spark, stream, outDir, ckDir,
-      trigger = Trigger.AvailableNow(), saltParts = Some(5))
+      trigger = Trigger.AvailableNow())
     q2.awaitTermination(180000)
     q2.stop()
     val sink = new ExactlyOnceSink(outDir)

@@ -16,10 +16,12 @@ import graft.model._
   * recursion's only observable effect is clearance.end := next event's
   * (scaled, owngoal-adjusted, direction-flipped) start.
   *
-  * This core is used by the streaming state function
-  * (flatMapGroupsWithState) and by the golden-fixture tests; the batch path
-  * re-expresses the same rules as Catalyst window expressions
-  * (OptaConvertBatch) and is property-tested equal to this core.
+  * This core is the production conversion of both paths: the batch path
+  * (`SpadlPipeline.convert`) and the streaming state function
+  * (flatMapGroupsWithState) run it per game. `OptaConvertBatch`
+  * re-expresses the same rules as Catalyst window expressions; it serves
+  * only the `spadl_actions_catalyst` query and is property-tested equal to
+  * this core.
   */
 object OptaGameConverter {
   import SpadlConfig._

@@ -42,6 +42,42 @@ object SpadlPipeline {
       doc_id: String, tokens: Array[Int], source: String,
       kps: Option[Seq[Kp]])
 
+  /** Sets the flag a keypass row's `pass_type` names on an Opta event:
+    * 'key' -> `keypass`, 'assisst' (sic, R/opta_events.R:96) -> `assist`.
+    */
+  def withKeypass(r: OptaRawEvent, passType: Option[String]): OptaRawEvent =
+    passType match {
+      case Some("key") => r.copy(keypass = true)
+      case Some("assisst") => r.copy(assist = true)
+      case _ => r
+    }
+
+  /** The winning pass_type per event id ([[KpWinner]]). */
+  private def kpByEvent(kps: Seq[Kp]): Map[Int, String] =
+    kps.groupBy(_.event_id)
+      .map { case (k, v) => k -> KpWinner.pickAll(v.map(_.pass_type)) }
+
+  /** J1: aggregate the outcome stream per doc, then a single equi left join
+    * on doc_id (shuffle-hash/broadcast by size — Catalyst + AQE pick).
+    * Without a keypass table every doc gets null `kps`.
+    */
+  private def docsWithKp(docs: Dataset[TokenDoc],
+      keypass: Option[Dataset[KeypassRow]]): Dataset[DocWithKp] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    keypass match {
+      case Some(kp) =>
+        val kpAgg = kp.groupBy($"doc_id")
+          .agg(collect_list(struct($"event_id", $"pass_type")).as("kps"))
+        docs.join(kpAgg, Seq("doc_id"), "left")
+          .select($"doc_id", $"tokens", $"source", $"kps").as[DocWithKp]
+      case None =>
+        docs.select($"doc_id", $"tokens", $"source",
+          lit(null).cast("array<struct<event_id:int,pass_type:string>>").as("kps"))
+          .as[DocWithKp]
+    }
+  }
+
   /** Decode one doc and convert it to SPADL actions (pure; shared with the
     * streaming state function).
     */
@@ -50,17 +86,9 @@ object SpadlPipeline {
     val gameId = docId.toInt
     TokenCodec.decode(tokens) match {
       case TokenCodec.OptaGame(home, wires) =>
-        val byEvent: Map[Int, String] = kps.groupBy(_.event_id)
-          .map { case (k, v) => k -> KpWinner.pickAll(v.map(_.pass_type)) }
-        val raws = wires.map { w =>
-          val r = TokenCodec.toOptaRaw(gameId, home, w)
-          byEvent.get(w.event_id) match {
-            case Some("key") => r.copy(keypass = true)
-            case Some("assisst") => r.copy(assist = true) // sic, R/opta_events.R:96
-            case _ => r
-          }
-        }
-        OptaGameConverter.convert(raws)
+        val byEvent = kpByEvent(kps)
+        OptaGameConverter.convert(wires.map(w => withKeypass(
+          TokenCodec.toOptaRaw(gameId, home, w), byEvent.get(w.event_id))))
       case TokenCodec.InstatGame(home, wires) =>
         InstatGameConverter.convert(gameId, home, wires.map(TokenCodec.toInstatRaw))
     }
@@ -72,21 +100,8 @@ object SpadlPipeline {
   def convert(spark: SparkSession, docs: Dataset[TokenDoc],
       keypass: Option[Dataset[KeypassRow]] = None): Dataset[SpadlAction] = {
     import spark.implicits._
-    val withKp: Dataset[DocWithKp] = keypass match {
-      case Some(kp) =>
-        // J1: aggregate the outcome stream per doc, then a single equi join
-        // on doc_id (shuffle-hash/broadcast by size — Catalyst + AQE pick).
-        val kpAgg = kp.groupBy($"doc_id")
-          .agg(collect_list(struct($"event_id", $"pass_type")).as("kps"))
-        docs.join(kpAgg, Seq("doc_id"), "left")
-          .select($"doc_id", $"tokens", $"source", $"kps")
-          .as[DocWithKp]
-      case None =>
-        docs.select($"doc_id", $"tokens", $"source",
-          lit(null).cast("array<struct<event_id:int,pass_type:string>>").as("kps"))
-          .as[DocWithKp]
-    }
-    withKp.flatMap(d => convertDoc(d.doc_id, d.tokens, d.kps.getOrElse(Nil)))
+    docsWithKp(docs, keypass)
+      .flatMap(d => convertDoc(d.doc_id, d.tokens, d.kps.getOrElse(Nil)))
   }
 
   /** Flat InStat event row — input of the declarative Catalyst conversion
@@ -132,31 +147,13 @@ object SpadlPipeline {
   def decodeOptaEvents(spark: SparkSession, docs: Dataset[TokenDoc],
       keypass: Option[Dataset[KeypassRow]] = None): Dataset[OptaRawEvent] = {
     import spark.implicits._
-    val withKp: Dataset[DocWithKp] = keypass match {
-      case Some(kp) =>
-        val kpAgg = kp.groupBy($"doc_id")
-          .agg(collect_list(struct($"event_id", $"pass_type")).as("kps"))
-        docs.join(kpAgg, Seq("doc_id"), "left")
-          .select($"doc_id", $"tokens", $"source", $"kps").as[DocWithKp]
-      case None =>
-        docs.select($"doc_id", $"tokens", $"source",
-          lit(null).cast("array<struct<event_id:int,pass_type:string>>").as("kps"))
-          .as[DocWithKp]
-    }
-    withKp.filter(_.source == "opta").flatMap { d =>
+    docsWithKp(docs, keypass).filter(_.source == "opta").flatMap { d =>
       val gameId = d.doc_id.toInt
-      val byEvent: Map[Int, String] = d.kps.getOrElse(Nil)
-        .groupBy(_.event_id)
-        .map { case (k, v) => k -> KpWinner.pickAll(v.map(_.pass_type)) }
+      val byEvent = kpByEvent(d.kps.getOrElse(Nil))
       TokenCodec.decode(d.tokens) match {
         case TokenCodec.OptaGame(home, wires) =>
-          wires.zipWithIndex.map { case (w, i) =>
-            val r = TokenCodec.toOptaRaw(gameId, home, w, i)
-            byEvent.get(w.event_id) match {
-              case Some("key") => r.copy(keypass = true)
-              case Some("assisst") => r.copy(assist = true)
-              case _ => r
-            }
+          wires.zipWithIndex.map { case (w, i) => withKeypass(
+            TokenCodec.toOptaRaw(gameId, home, w, i), byEvent.get(w.event_id))
           }
         case _ => Vector.empty
       }

@@ -199,12 +199,4 @@ object Features {
         .withColumnRenamed("p_concedes", "concedes")
     }
   }
-
-  /** SPADL columns excluded from the numeric cast / NA-drop key set. */
-  private val keyCols: Set[String] = Set(
-    "game_id", "event_id", "action_idx", "period_id", "minute", "second",
-    "time_seconds", "player_id", "team_id", "home_team_id", "side",
-    "start_x", "start_y", "end_x", "end_y", "type_id", "type_name",
-    "result_id", "result_name", "bodypart_id", "bodypart_name",
-    "assist", "keypass")
 }

@@ -23,6 +23,17 @@ object TextOps {
 
   private def words(text: Column): Column = split(text, " ")
 
+  /** The word n-grams of the word array `ws` in order (each the
+    * space-joined run of `n` words starting at 1, 2, ...); empty when `ws`
+    * has fewer than `n` words. `transform` is an interpreted lambda, so
+    * reference the result once per row.
+    */
+  private def wordGrams(ws: Column, n: Int): Column =
+    when(size(ws) >= n,
+        transform(sequence(lit(1), size(ws) - (n - 1)),
+          i => array_join(slice(ws, i, lit(n)), " ")))
+      .otherwise(array().cast("array<string>"))
+
   private def countIn(text: Column, vocab: Seq[String]): Column =
     size(filter(words(text), w => w.isin(vocab: _*)))
 
@@ -258,15 +269,9 @@ object TextOps {
     QueryDef("q50_contamination",
       (s, d) => {
         val docs = T.load(s, d, "documents")
-        def grams(df: DataFrame): DataFrame = {
-          val ws = split(col("text"), " ")
-          val n = size(ws)
-          val idxs = when(n >= 5, sequence(lit(1), n - 4))
-            .otherwise(array().cast("array<int>"))
+        def grams(df: DataFrame): DataFrame =
           df.select(col("doc_id"), explode(array_distinct(
-            transform(idxs, i => array_join(slice(ws, i, lit(5)), " "))))
-            .as("gram"))
-        }
+            wordGrams(words(col("text")), 5))).as("gram"))
         val evalG = grams(docs.filter(col("doc_id") < 20))
           .select(col("doc_id").as("eval_doc"), col("gram"))
         val corpusG = grams(docs.filter(col("doc_id") >= 20))
@@ -346,10 +351,7 @@ object TextOps {
         // (< 2 words); `n_2grams > 0` replicates that row set.
         val docs = T.load(s, d, "documents")
         val ws = words(col("text"))
-        val g2 = when(size(ws) >= 2,
-            transform(sequence(lit(1), size(ws) - 1),
-              i => array_join(slice(ws, i, lit(2)), " ")))
-          .otherwise(array().cast("array<string>"))
+        val g2 = wordGrams(ws, 2)
         val n2 = greatest(size(ws) - 1, lit(0)).cast("long")
         val w1 = docs.select(col("doc_id"), explode(ws).as("w"))
           .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
@@ -412,11 +414,8 @@ object TextOps {
         // exact relation the old cross-doc `.distinct()` did — minus its
         // corpus-wide exchange. The gram-keyed window is then the FIRST
         // (and only) shuffle of the gram table (guide §2.4).
-        val grams = docs.select(col("doc_id"), explode(array_distinct(
-            transform(
-              when(size(ws) >= 8, sequence(lit(1), size(ws) - 7))
-                .otherwise(array().cast("array<int>")),
-              i => array_join(slice(ws, i, lit(8)), " ")))).as("gram"))
+        val grams = docs.select(col("doc_id"),
+          explode(array_distinct(wordGrams(ws, 8))).as("gram"))
         grams
           .withColumn("nd",
             count(lit(1)).over(Window.partitionBy(col("gram"))))
@@ -631,11 +630,8 @@ object TextOps {
         // already subsumed by collect_set below — sets are duplicate-
         // insensitive and partial collect_set dedups map-side — so the
         // gram-keyed aggregation is the ONLY shuffle of the gram table.
-        val grams = docs.select(col("source"), explode(array_distinct(
-            transform(
-              when(size(ws) >= 8, sequence(lit(1), size(ws) - 7))
-                .otherwise(array().cast("array<int>")),
-              i => array_join(slice(ws, i, lit(8)), " ")))).as("gram"))
+        val grams = docs.select(col("source"),
+          explode(array_distinct(wordGrams(ws, 8))).as("gram"))
         grams.groupBy(col("gram"))
           .agg(sort_array(collect_set(col("source"))).as("ss"))
           .filter(size(col("ss")) >= 2)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.codec.TokenCodec
-import graft.convert.{InstatGameConverter, OptaGameConverter}
+import graft.convert.{InstatGameConverter, OptaGameConverter, SpadlPipeline}
 import graft.model._
 import graft.vaep.ValuationCore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -21,8 +21,10 @@ import java.sql.Timestamp
   * time_in_seconds for InStat).
   *
   * Emission protocol (per key):
-  *  - arriving rows below the current watermark are dropped (late) and
-  *    counted; duplicate `seq` deliveries are dropped (idempotent input);
+  *  - arriving rows below the current watermark are dropped (late) by
+  *    Spark before the state function sees them, and counted in its
+  *    `numRowsDroppedByWatermark`; duplicate `seq` deliveries are dropped
+  *    (idempotent input);
   *  - Opta: the safe prefix = buffered events with event_time < watermark,
   *    in seq order. Since any future row sorts after every safe event
   *    (event_time is sort-compatible and late rows are dropped), actions
@@ -177,15 +179,9 @@ object SpadlStream {
       carry: ValuationCore.Carry, finalFlush: Boolean): EmitResult = {
     val gameId = key.toInt
     val ordered = window.sortBy(_.seq)
-    val raws = ordered.map { b =>
-      val r = TokenCodec.toOptaRaw(gameId, home,
-        TokenCodec.decodeOptaGroup(b.group))
-      b.pass_type match {
-        case Some("key") => r.copy(keypass = true)
-        case Some("assisst") => r.copy(assist = true)
-        case _ => r
-      }
-    }
+    val raws = ordered.map(b => SpadlPipeline.withKeypass(
+      TokenCodec.toOptaRaw(gameId, home, TokenCodec.decodeOptaGroup(b.group)),
+      b.pass_type))
     val withSrc = OptaGameConverter.convertWithSrc(raws)
     val w = ordered.size // all in-play: period-filtered at accept time
     // stability cut: the longest output PREFIX whose actions all have
@@ -239,22 +235,28 @@ object SpadlStream {
     ValuationCore.value(InstatGameConverter.convert(gameId, home, raws))
   }
 
+  /** Session close: value everything still buffered for the game (resuming
+    * from `buf`'s emitted count and carry) and drop the state.
+    */
+  private def closeSession(key: String, provider: Int, home: Int,
+      events: Seq[BufEvent], buf: GameBuf,
+      state: GroupState[GameBuf]): Iterator[ValuedAction] = {
+    val out =
+      if (provider == TokenCodec.ProviderOpta)
+        optaEmit(key, home, events, buf.emittedActions, buf.droppedPrefix,
+          buf.carry, finalFlush = true).out
+      else instatValued(key, home, events)
+    state.remove()
+    out.iterator
+  }
+
   def stateFn(sessionGapMs: Long, emissionLagMs: Long,
-      lateCounter: Option[org.apache.spark.util.LongAccumulator],
       lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None)(
       key: String, rows: Iterator[StreamEvent],
       state: GroupState[GameBuf]): Iterator[ValuedAction] = {
     if (state.hasTimedOut) {
-      // session close: flush the remainder, drop the state
       val buf = state.get
-      val events = buf.toEvents
-      val out =
-        if (buf.provider == TokenCodec.ProviderOpta)
-          optaEmit(key, buf.home, events, buf.emittedActions,
-            buf.droppedPrefix, buf.carry, finalFlush = true).out
-        else instatValued(key, buf.home, events)
-      state.remove()
-      return out.iterator
+      return closeSession(key, buf.provider, buf.home, buf.toEvents, buf, state)
     }
 
     val wm = state.getCurrentWatermarkMs()
@@ -271,13 +273,11 @@ object SpadlStream {
     // the stream matches the batch path bitwise. Safe: join matches are
     // always released before the 31s emission lag lets the action emit.
     val kpUpgrade = scala.collection.mutable.Map.empty[Int, String]
-    var dropped = 0L
     var lostUpg = 0L
     rows.foreach { e =>
       // truly-late drop: the event's region is already emitted AND its
       // duplicates of retired events land here too (retired => ts<frontier)
       if (e.event_time.getTime < buf0.frontierTs) {
-        dropped += 1
         // a keypass upgrade aimed at an already-emitted/retired event is a
         // PARITY LOSS, not routine lateness: the batch path would have the
         // upgraded flag. Counted separately (round-2 ADVICE) so a margin
@@ -298,7 +298,6 @@ object SpadlStream {
           kpUpgrade.get(e.seq).map(graft.convert.KpWinner.pick(_, t)).getOrElse(t)
       }
     }
-    lateCounter.foreach(_.add(dropped))
     lostUpgrades.foreach(_.add(lostUpg))
     val freshV = fresh.result()
     val events0 = prior ++ freshV
@@ -329,15 +328,8 @@ object SpadlStream {
     // round-trip per game: a watermark jump (sentinel / quiet stream)
     // closes in its own batch, not two batches later. The timeout path
     // below still covers gradual watermark advance past an idle key.
-    if (wm - emissionLagMs >= maxTs + sessionGapMs) {
-      val out =
-        if (provider == TokenCodec.ProviderOpta)
-          optaEmit(key, home, events, buf0.emittedActions,
-            buf0.droppedPrefix, buf0.carry, finalFlush = true).out
-        else instatValued(key, home, events)
-      state.remove()
-      return out.iterator
-    }
+    if (wm - emissionLagMs >= maxTs + sessionGapMs)
+      return closeSession(key, provider, home, events, buf0, state)
     // clamp: after a watermark jump the natural close time may already be
     // in the past — close at the next watermark advance instead
     state.setTimeoutTimestamp(math.max(maxTs + sessionGapMs, wm + 1))
@@ -378,7 +370,6 @@ object SpadlStream {
       keypass: Option[DataFrame] = None,
       watermarkDelay: String = "10 seconds",
       sessionGap: String = DefaultSessionGap,
-      lateCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None,
       emissionLagOverride: Option[Long] = None)
       : Dataset[ValuedAction] = {
@@ -420,8 +411,7 @@ object SpadlStream {
       .groupByKey(_.doc_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
-        stateFn(intervalMs(sessionGap), emissionLagMs, lateCounter,
-          lostUpgrades))
+        stateFn(intervalMs(sessionGap), emissionLagMs, lostUpgrades))
   }
 
   private def intervalMs(s: String): Long = {

@@ -60,8 +60,7 @@ object StateStores {
     // Sizing rule at the design scale: blockCache >= per-partition hot
     // state (keys touched per batch x row width), bounded by executor
     // memory / state partitions per executor.
-    "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" ->
-      sys.env.getOrElse("GRAFT_ROCKSDB_CACHE_MB", "256"))
+    "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "256")
 
   /** confs selected by the GRAFT_STATE env knob ("rocksdb" or unset/hdfs). */
   def envConfs: Map[String, String] =

@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   *    previous atomic action with the scores/concedes swap on team change,
   *    zeroed after a goal atomic or a >10 s gap).
   *
-  * Plan shape matches [[Valuation.value]]: two Window stages over ONE
-  * (game_id, atomic_idx) exchange, everything else codegen projections.
+  * Plan shape: two Window stages over ONE (game_id, atomic_idx) exchange,
+  * everything else codegen projections. Unlike the standard path, which
+  * runs the scalar [[ValuationCore]] per game, this is the only atomic
+  * implementation.
   */
 object AtomicValuation {
 

@@ -1,9 +1,7 @@
 package graft.vaep
 
 import graft.model.{SpadlAction, SpadlConfig, ValuedAction}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Deterministic probability scorer + VAEP action values.
   *
@@ -22,8 +20,8 @@ import org.apache.spark.sql.functions._
   *   vaep = offensive + defensive.
   *
   * Scorer inputs are feature-frame values (team!=home flipped coordinates,
-  * running goalscore_diff) so batch and streaming paths agree bitwise: both
-  * evaluate EXACTLY the same double arithmetic in the same order.
+  * running goalscore_diff). The batch path ([[value]]) and the streaming
+  * state function both run [[ValuationCore]], so they agree bitwise.
   */
 object Valuation {
 
@@ -39,19 +37,18 @@ object Valuation {
   final val CWFail = 0.4
   final val CWGsDiff = -0.05
 
-  // StrictMath, not math.exp: Spark's EXP expression evaluates via
-  // StrictMath for cross-platform determinism, and Math.exp's JIT
-  // intrinsic can differ by 1-2 ULP — enough to break the bitwise
-  // batch==streaming output-parity requirement.
+  // StrictMath, not math.exp: Math.exp's JIT intrinsic can differ by
+  // 1-2 ULP across platforms, and the committed golden digests
+  // (golden_valued.tsv) were generated with StrictMath's exp.
   @inline def sigmoid(z: Double): Double = 1.0 / (1.0 + StrictMath.exp(-z))
 
-  /** P(score within 10 actions) — scalar form (streaming/core path). */
+  /** P(score within 10 actions). */
   def scoreP(endDist: Double, isShot: Boolean, isSuccess: Boolean,
       gsDiff: Double): Double =
     sigmoid(SB + SWEndDist * endDist + SWShot * b2d(isShot) +
       SWSuccess * b2d(isSuccess) + SWGsDiff * gsDiff)
 
-  /** P(concede within 10 actions) — scalar form. */
+  /** P(concede within 10 actions). */
   def concedeP(startDist: Double, endDist: Double, isFail: Boolean,
       gsDiff: Double): Double =
     sigmoid(CB + CWStartDist * startDist + CWEndDist * endDist +
@@ -59,101 +56,25 @@ object Valuation {
 
   @inline private def b2d(b: Boolean): Double = if (b) 1.0 else 0.0
 
-  // ------------------------------------------------------------- DataFrame
-
-  private val w = Window.partitionBy("game_id").orderBy("action_idx")
-
-  private def flipped(xy: String, dim: Double): Column =
-    when(col("team_id") =!= col("home_team_id"), lit(dim) - col(xy))
-      .otherwise(col(xy))
-
-  private def distToGoal(x: Column, y: Column): Column = {
-    val dx = abs(lit(SpadlConfig.GoalX) - x)
-    val dy = abs(lit(SpadlConfig.GoalY) - y)
-    sqrt(dx * dx + dy * dy)
-  }
-
-  /** goalscore_diff exactly as features_old.R:305-327 (team_a = first
-    * action's team; cumulative goals BEFORE the current action).
-    */
-  private def goalscoreDiff: Column = {
-    val isGoal = col("type_name").contains("shot") &&
-      col("result_name") === "success"
-    val isOwngoal = col("type_name").contains("shot") &&
-      col("result_name") === "owngoal"
-    val teamA = first(col("team_id")).over(
-      w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    val teamIsA = col("team_id") === teamA
-    def cumBefore(c: Column) = coalesce(
-      sum(c.cast("int")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-      lit(0))
-    val gsA = cumBefore((isGoal && teamIsA) || (isOwngoal && !teamIsA))
-    val gsB = cumBefore((isGoal && !teamIsA) || (isOwngoal && teamIsA))
-    (when(teamIsA, gsA).otherwise(gsB) -
-      when(teamIsA, gsB).otherwise(gsA)).cast("double")
-  }
-
   /** Adds scores/concedes probabilities + VAEP values to a SPADL action
-    * frame. Built as exactly TWO Window stages over the same
-    * (game_id, action_idx) partitioning — one for the running goalscore,
-    * one for the lag-1 prevs — sharing a single exchange+sort; everything
-    * else is whole-stage-codegen projections. (A naive withColumn chain
-    * duplicates the window nodes five-fold.)
+    * frame. Input must carry the [[SpadlAction]] columns (extra columns are
+    * ignored); output is exactly the [[ValuedAction]] columns. Each game is
+    * valued by [[ValuationCore]] in `action_idx` order after one exchange
+    * by game, so batch and streaming output come from the same code.
     */
   def value(actions: DataFrame): DataFrame = {
-    val sx = flipped("start_x", SpadlConfig.FieldLength)
-    val sy = flipped("start_y", SpadlConfig.FieldWidth)
-    val ex = flipped("end_x", SpadlConfig.FieldLength)
-    val ey = flipped("end_y", SpadlConfig.FieldWidth)
-    val startDist = distToGoal(sx, sy)
-    val endDist = distToGoal(ex, ey)
-    val isShot = col("type_name").contains("shot")
-    val isSuccess = col("result_name") === "success"
-    val isFail = col("result_name") === "fail"
-
-    def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    // stage 1: ONE window pass computing the goalscore diff, then the two
-    // probabilities as a plain projection.
-    // EXACT same op order as scoreP/concedeP (bitwise parity w/ streaming)
-    val stage1 = actions.select(col("*"), goalscoreDiff.as("_gs"))
-      .select(col("*"),
-        sig(lit(SB) + lit(SWEndDist) * endDist +
-          lit(SWShot) * isShot.cast("double") +
-          lit(SWSuccess) * isSuccess.cast("double") +
-          lit(SWGsDiff) * col("_gs")).as("scores"),
-        sig(lit(CB) + lit(CWStartDist) * startDist +
-          lit(CWEndDist) * endDist + lit(CWFail) * isFail.cast("double") +
-          lit(CWGsDiff) * col("_gs")).as("concedes"))
-      .drop("_gs")
-
-    // stage 2: ONE window pass for all lag-1 columns, then pure arithmetic
-    val stage2 = stage1.select(col("*"),
-      lag(col("team_id"), 1).over(w).as("_lteam"),
-      lag(col("scores"), 1).over(w).as("_lscores"),
-      lag(col("concedes"), 1).over(w).as("_lconcedes"),
-      lag(col("time_seconds"), 1).over(w).as("_lts"),
-      (lag(isShot, 1).over(w) &&
-        lag(col("result_name"), 1).over(w).isin("success", "owngoal"))
-        .as("_lgoal"))
-
-    val sameTeam = col("team_id") === col("_lteam")
-    val tooLong = abs(col("time_seconds") - col("_lts")) > lit(10.0)
-    def prevP(same: Column, other: Column): Column = coalesce(
-      when(tooLong || col("_lgoal"), lit(0.0))
-        .otherwise(when(sameTeam, same).otherwise(other)),
-      lit(0.0)) // first action of the game: prev = 0
-
-    val off = col("scores") - prevP(col("_lscores"), col("_lconcedes"))
-    val dfn = -(col("concedes") - prevP(col("_lconcedes"), col("_lscores")))
-    stage2.select(col("*"),
-        off.as("offensive_value"), dfn.as("defensive_value"),
-        (off + dfn).as("vaep_value"))
-      .drop("_lteam", "_lscores", "_lconcedes", "_lts", "_lgoal")
+    val spark = actions.sparkSession
+    import spark.implicits._
+    actions.as[SpadlAction].groupByKey(_.game_id)
+      .flatMapGroups((_, it) =>
+        ValuationCore.value(it.toVector.sortBy(_.action_idx)))
+      .toDF()
   }
 }
 
-/** Pure per-game valuation core — same arithmetic as [[Valuation.value]],
-  * used inside the streaming state function and by equivalence tests.
+/** Pure per-game valuation core: the one VAEP implementation for standard
+  * SPADL, run per game by [[Valuation.value]] (batch) and inside the
+  * streaming state function.
   */
 object ValuationCore {
   import Valuation._

@@ -313,29 +313,29 @@ class AtomicAndPlanSpec extends AnyFunSuite {
     md.collect()
     val plan = md.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
-    // valuation + feature windows all share the (game_id, action_idx)
-    // spec: exactly ONE hash-by-game exchange feeds every window pass —
-    // a join-based formulation would add exchanges (and blew up the
-    // optimizer's constraint propagation; see Features.modelData)
-    val gameExchanges = plan.linesIterator
-      .count(l => l.contains("Exchange hashpartitioning(game_id"))
-    assert(gameExchanges == 1, s"expected 1 by-game exchange:\n$plan")
+    // exactly two exchanges: the valuation's grouping (it hashes the key
+    // column groupByKey appends, not game_id) and ONE hash-by-game
+    // exchange feeding every feature window pass — a join-based
+    // formulation would add exchanges (and blew up the optimizer's
+    // constraint propagation; see Features.modelData)
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toVector
+    assert(exchanges.size == 2, s"expected 2 exchanges:\n$plan")
+    assert(exchanges.count(_.contains("Exchange hashpartitioning(game_id")) == 1,
+      s"expected 1 by-game exchange:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       "modelData must not contain a cross join")
   }
 
-  test("plan: valuation = 3 window passes over ONE exchange+sort") {
+  test("plan: valuation = ONE exchange by game, no Window node") {
     import spark.implicits._
     val df = spark.createDataset(Seq(act(1), act(2))).toDF()
     val plan = graft.vaep.Valuation.value(df).queryExecution
       .executedPlan.toString
-    // 3 is minimal: the running-goalscore sums nest over the first(team)
-    // window result (one extra pass), plus the lag stage — but all share a
-    // single hash-partition-by-game exchange, which is what scales.
-    val windows = plan.linesIterator.count(_.contains("Window ["))
-    assert(windows == 3, s"expected 3 Window nodes, got $windows")
+    // the scalar core values each game after one grouping exchange; the
+    // formula is never re-expressed as window expressions
+    assert(!plan.contains("Window"), s"unexpected Window node:\n$plan")
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges == 1, s"expected 1 exchange, got $exchanges")
+    assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$plan")
   }
 }

@@ -441,6 +441,49 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       s"healthy run reported late=${metrics.lateRows} lost=${metrics.lostUpgrades}")
   }
 
+  test("a row behind the watermark is counted in the listener's lateRows") {
+    // Spark drops rows below the watermark before the state function sees
+    // them; the listener reports Spark's own count of those rows.
+    import spark.implicits._
+    val games = FixtureGen.corpus(2, 60).map(_.copy(keypasses = Nil))
+    val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, Base))
+      .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
+    val (h, t) = all.splitAt(all.size / 2)
+    val first = all.head
+    assert(h.last.event_time.getTime - first.event_time.getTime > 10000L,
+      "first half spans less than the 10 s watermark delay")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_late")
+    val srcDir = s"$tmp/src"
+    // one file per batch: the two halves, then the first event again. A
+    // batch drops rows behind the PREVIOUS batch's watermark, so the third
+    // batch drops it: it is behind the first half's max minus 10 s.
+    spark.createDataset(h).repartition(1).write.parquet(s"$srcDir/p1")
+    spark.createDataset(t).repartition(1).write.parquet(s"$srcDir/p2")
+    spark.createDataset(Seq(first)).repartition(1).write.parquet(s"$srcDir/p3")
+    val stream = spark.readStream
+      .schema(spark.createDataset(all).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$srcDir/*")
+      .as[SpadlStream.StreamEvent]
+    val metrics = new StreamJob.EmitMetricsListener
+    spark.streams.addListener(metrics)
+    try {
+      val q = StreamJob.start(spark, stream, s"$tmp/out", s"$tmp/ck",
+        trigger = Trigger.AvailableNow(), metrics = Some(metrics))
+      q.awaitTermination(120000)
+      q.stop()
+      q.exception.foreach(e => throw e)
+      // progress events reach the listener asynchronously: wait for all
+      val deadline = System.currentTimeMillis() + 10000
+      while (metrics.batches < q.recentProgress.length &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(metrics.batches >= q.recentProgress.length,
+        s"listener saw ${metrics.batches} of ${q.recentProgress.length} batches")
+      assert(metrics.lateRows >= 1,
+        s"late row not counted: lateRows=${metrics.lateRows}")
+    } finally spark.streams.removeListener(metrics)
+  }
+
   test("IcebergMergeSink: MERGE statement parses; write refuses w/o catalog") {
     val sink = new graft.streaming.IcebergMergeSink("lake.graft.spadl")
     val sql = sink.mergeSql("src_view")
@@ -511,7 +554,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     val g = FixtureGen.corpus(24, 200).find(_.doc.source == "instat").get
     val events = SpadlStream.toStreamEvents(g.doc, Base)
     val n = events.size
-    val fn = SpadlStream.stateFn(600000L, 0L, None) _
+    val fn = SpadlStream.stateFn(600000L, 0L) _
 
     var stateOpt: Option[SpadlStream.GameBuf] = None
     var wm = 0L
@@ -591,14 +634,6 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("stream_lost_upg").start()
     try {
-      if (sys.env.contains("GRAFT_TEST_DEBUG")) {
-        spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-            println(s"[lostupg] batch=${e.progress.batchId} rows=${e.progress.numInputRows} wm=${e.progress.eventTime.get("watermark")} sources=${e.progress.sources.map(s => s.description.take(20) + ":" + s.numInputRows).mkString(" ")}")
-          override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        })
-      }
       // batch 1: events up to t=135 plus a non-matching keypass row at
       // t=135 — the GLOBAL watermark is the min over both inputs, so the
       // kp side must advance too. Watermark after: 135 - 60 = 75s.

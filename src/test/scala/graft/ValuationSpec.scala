@@ -7,7 +7,7 @@ import graft.vaep.{Valuation, ValuationCore}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** W9 valuation: Catalyst window path == pure core path BITWISE (the
+/** W9 valuation: DataFrame entry point == pure core path BITWISE (the
   * float-determinism requirement of SURVEY.md §7.5.5 — identical output at
   * any parallelism), plus semantic pins for the VAEP formula.
   */

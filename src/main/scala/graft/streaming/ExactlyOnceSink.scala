@@ -45,7 +45,9 @@ final class ExactlyOnceSink(outDir: String,
 
   /** foreachBatch body. */
   def write(batch: DataFrame, batchId: Long): Unit = {
-    if (committedBatchIds().contains(batchId)) return // re-delivery: skip
+    val fs = commitsDir.getFileSystem(hadoopConf)
+    val marker = new Path(commitsDir, batchId.toString)
+    if (fs.exists(marker)) return // re-delivery: skip
     val withLineage = batch
       .withColumn("_lineage_partition", spark_partition_id())
       .withColumn("_batch_id", lit(batchId))
@@ -137,9 +139,8 @@ final class ExactlyOnceSink(outDir: String,
         }
       }
     }
-    val fs = commitsDir.getFileSystem(hadoopConf)
     fs.mkdirs(commitsDir)
-    fs.create(new Path(commitsDir, batchId.toString), true).close()
+    fs.create(marker, true).close()
   }
 
   /** Committed view of the sink (what a downstream reader consumes). */

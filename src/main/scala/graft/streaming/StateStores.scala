@@ -15,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   * besides being the fast path for the Catalyst encoder, it serializes
   * to a single compact byte blob per key, which is exactly the shape a
   * RocksDB value wants (one get/put per key per batch, no per-element
-  * codec work).
+  * codec work). Its changelog and snapshot uploads go through the same
+  * checkpoint file manager as the heap provider's delta files, so on a
+  * `file:` checkpoint they too run on the [[ForkFreeLocalFs]] binding that
+  * [[StreamJob.start]] sets.
   *
   * Selection knob: `GRAFT_STATE=rocksdb` (RunStream) or an
   * explicit conf. The provider is a per-QUERY setting read at stream

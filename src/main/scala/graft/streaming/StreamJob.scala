@@ -9,15 +9,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   */
 object StreamJob {
 
-  /** Per-round metrics listener: rows/sec, state size, emitted counts —
-    * the "per-partition lineage + emitted-row metrics" of the north rule
-    * (lineage columns land in the sink; aggregate progress logs here).
-    * When [[start]] is given the listener it also wires in the engine's
-    * lost-keypass-upgrade accumulator (round-3 VERDICT #8), so a
-    * parity-margin break is visible in the per-batch telemetry line
-    * instead of only inside state unit tests.
+  /** Per-batch metrics listener: one JSON object per micro-batch, built
+    * from its `StreamingQueryProgress`, passed to `emit` (stdout by
+    * default):
+    * {{{
+    * {"batchId":3,"inputRows":1200,"stateRows":64,"lateRows":0,
+    *  "lostUpgrades":0,"watermark":"2024-01-01T00:41:10.000Z",
+    *  "durationMs":{"addBatch":410,"walCommit":2,"commitOffsets":2,
+    *                "triggerExecution":470},"stateCommitMs":9}
+    * }}}
+    * `inputRows`, `lateRows` (rows Spark dropped as behind the watermark,
+    * `numRowsDroppedByWatermark`), `lostUpgrades` and `stateCommitMs` (the
+    * state operators' `commitTimeMs`) count that batch; `stateRows` is the
+    * state size after it. When [[start]] is given the listener it wires in
+    * the engine's lost-keypass-upgrade accumulator, so a parity-margin
+    * break is visible per batch instead of only inside state unit tests.
     */
-  final class EmitMetricsListener extends StreamingQueryListener {
+  final class EmitMetricsListener(emit: String => Unit = println(_))
+      extends StreamingQueryListener {
     @volatile var totalInputRows = 0L
     @volatile var totalStateRows = 0L
     @volatile var batches = 0L
@@ -29,25 +38,45 @@ object StreamJob {
     /** keypass upgrades that missed their already-emitted region — any
       * nonzero value is a parity loss vs the batch path. */
     def lostUpgrades: Long = lostAcc.map(_.sum).getOrElse(0L)
+    private var lostBefore = 0L
     override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+      lostBefore = lostUpgrades
     override def onQueryProgress(
         e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      import org.json4s.JsonDSL._
+      val p = e.progress
+      val so = p.stateOperators
+      val late = so.map(_.numRowsDroppedByWatermark).sum
+      val lost = lostUpgrades
       batches += 1
-      totalInputRows += e.progress.numInputRows
-      val so = e.progress.stateOperators
+      totalInputRows += p.numInputRows
       if (so.nonEmpty) totalStateRows = so.map(_.numRowsTotal).sum
-      lateRows += so.map(_.numRowsDroppedByWatermark).sum
-      println(s"[graft-stream-metrics] batch=${e.progress.batchId} " +
-        s"inputRows=${e.progress.numInputRows} stateRows=$totalStateRows " +
-        s"lateRows=$lateRows lostUpgrades=$lostUpgrades")
+      lateRows += late
+      def ms(k: String): Option[Long] = Option(p.durationMs.get(k)).map(_.toLong)
+      val line = ("batchId" -> p.batchId) ~ ("inputRows" -> p.numInputRows) ~
+        ("stateRows" -> totalStateRows) ~ ("lateRows" -> late) ~
+        ("lostUpgrades" -> (lost - lostBefore)) ~
+        ("watermark" -> Option(p.eventTime.get("watermark"))) ~
+        ("durationMs" -> ("addBatch" -> ms("addBatch")) ~
+          ("walCommit" -> ms("walCommit")) ~
+          ("commitOffsets" -> ms("commitOffsets")) ~
+          ("triggerExecution" -> ms("triggerExecution"))) ~
+        ("stateCommitMs" -> so.map(_.commitTimeMs).sum)
+      lostBefore = lost
+      emit(org.json4s.jackson.JsonMethods.compact(line))
     }
     override def onQueryTerminated(
         e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
   /** Start the full job: events stream -> valued actions -> exactly-once
-    * sink, resumable from `checkpointDir`. An `outDir` of the form
+    * sink, resumable from `checkpointDir`. Unless the session already binds
+    * `fs.AbstractFileSystem.file.impl` (as a session conf or a
+    * `spark.hadoop.` one), this sets it on the session to
+    * [[ForkFreeLocalFs]], so the query's offset, commit and source logs
+    * and its state-store files on `file:` checkpoints are written without
+    * starting a process per file. An `outDir` of the form
     * `iceberg:<catalog.db.table>` routes each micro-batch through
     * [[IcebergMergeSink]] (cluster path, requires a configured Iceberg
     * catalog); any filesystem URI uses [[ExactlyOnceSink]] (parquet +
@@ -68,6 +97,10 @@ object StreamJob {
         val sink = new ExactlyOnceSink(outDir)
         sink.write
       }
+    val fsKey = ForkFreeLocalFs.ImplKey
+    if (spark.conf.getOption(fsKey).isEmpty &&
+        !spark.sparkContext.getConf.contains(s"spark.hadoop.$fsKey"))
+      spark.conf.set(fsKey, classOf[ForkFreeLocalFs].getName)
     // telemetry accumulator, surfaced per batch by the metrics listener
     val lostAcc = metrics.map(_ =>
       spark.sparkContext.longAccumulator("graft.lost_kp_upgrades"))

@@ -81,39 +81,23 @@ object TokenCodec {
   def decode(tokens: Array[Int]): DecodedGame = {
     require(tokens.length >= 4, s"truncated header: ${tokens.length} ints")
     require(tokens(0) == Version, s"unknown codec version ${tokens(0)}")
-    val provider = tokens(1)
     val home = tokens(2)
-    val n = tokens(3)
     var i = 4
-    provider match {
+    var k = 0
+    tokens(1) match {
       case ProviderOpta =>
         val out = Vector.newBuilder[OptaWire]
-        var k = 0
-        while (k < n) {
-          val nq = tokens(i + 10)
-          val quals = Vector.newBuilder[(Int, Int)]
-          var q = 0
-          while (q < nq) {
-            quals += ((tokens(i + 11 + 2 * q), tokens(i + 12 + 2 * q)))
-            q += 1
-          }
-          out += OptaWire(tokens(i), tokens(i + 1), tokens(i + 2),
-            tokens(i + 3), tokens(i + 4), tokens(i + 5), tokens(i + 6),
-            tokens(i + 7) == 1, tokens(i + 8), tokens(i + 9), quals.result())
-          i += 11 + 2 * nq
+        while (k < tokens(3)) {
+          out += decodeOptaGroup(tokens, i)
+          i = nextGroup(tokens, i)
           k += 1
         }
         OptaGame(home, out.result())
       case ProviderInstat =>
         val out = Vector.newBuilder[InstatWire]
-        var k = 0
-        while (k < n) {
-          out += InstatWire(tokens(i), tokens(i + 1), tokens(i + 2),
-            tokens(i + 3), tokens(i + 4), tokens(i + 5), tokens(i + 6),
-            tokens(i + 7), tokens(i + 8), tokens(i + 9), tokens(i + 10) == 1,
-            tokens(i + 11), tokens(i + 12), tokens(i + 13), tokens(i + 14),
-            tokens(i + 15))
-          i += 16
+        while (k < tokens(3)) {
+          out += decodeInstatGroup(tokens, i)
+          i = nextGroup(tokens, i)
           k += 1
         }
         InstatGame(home, out.result())
@@ -121,40 +105,53 @@ object TokenCodec {
     }
   }
 
+  /** Offset of the event group after the one starting at `i` — the one
+    * group-length rule (Opta 11 + 2*n_qual ints, InStat 16).
+    */
+  private def nextGroup(tokens: Array[Int], i: Int): Int =
+    i + (if (tokens(1) == ProviderOpta) 11 + 2 * tokens(i + 10) else 16)
+
   /** Decode a single self-delimiting event group (streaming: one event
     * per stream row).
     */
-  def decodeOptaGroup(g: Array[Int]): OptaWire = {
-    val nq = g(10)
+  def decodeOptaGroup(g: Array[Int]): OptaWire = decodeOptaGroup(g, 0)
+
+  /** The Opta group starting at offset `o` of `g`. */
+  def decodeOptaGroup(g: Array[Int], o: Int): OptaWire = {
+    val nq = g(o + 10)
     val quals = Vector.newBuilder[(Int, Int)]
     var q = 0
-    while (q < nq) { quals += ((g(11 + 2 * q), g(12 + 2 * q))); q += 1 }
-    OptaWire(g(0), g(1), g(2), g(3), g(4), g(5), g(6), g(7) == 1, g(8), g(9),
-      quals.result())
+    while (q < nq) {
+      quals += ((g(o + 11 + 2 * q), g(o + 12 + 2 * q)))
+      q += 1
+    }
+    OptaWire(g(o), g(o + 1), g(o + 2), g(o + 3), g(o + 4), g(o + 5),
+      g(o + 6), g(o + 7) == 1, g(o + 8), g(o + 9), quals.result())
   }
 
-  def decodeInstatGroup(g: Array[Int]): InstatWire =
-    InstatWire(g(0), g(1), g(2), g(3), g(4), g(5), g(6), g(7), g(8), g(9),
-      g(10) == 1, g(11), g(12), g(13), g(14), g(15))
+  def decodeInstatGroup(g: Array[Int]): InstatWire = decodeInstatGroup(g, 0)
+
+  /** The InStat group starting at offset `o` of `g`. */
+  def decodeInstatGroup(g: Array[Int], o: Int): InstatWire =
+    InstatWire(g(o), g(o + 1), g(o + 2), g(o + 3), g(o + 4), g(o + 5),
+      g(o + 6), g(o + 7), g(o + 8), g(o + 9), g(o + 10) == 1, g(o + 11),
+      g(o + 12), g(o + 13), g(o + 14), g(o + 15))
 
   /** Split a doc's tokens into (header-implied provider/home, per-event
     * groups) without fully materializing typed events.
     */
   def eventGroups(tokens: Array[Int]): (Int, Int, Vector[Array[Int]]) = {
     require(tokens(0) == Version)
-    val provider = tokens(1)
-    val home = tokens(2)
-    val n = tokens(3)
     val out = Vector.newBuilder[Array[Int]]
     var i = 4
     var k = 0
-    while (k < n) {
-      val len = if (provider == ProviderOpta) 11 + 2 * tokens(i + 10) else 16
-      out += java.util.Arrays.copyOfRange(tokens, i, i + len)
-      i += len
+    while (k < tokens(3)) {
+      val j = nextGroup(tokens, i)
+      out += java.util.Arrays.copyOfRange(tokens, i, j)
+      i = j
       k += 1
     }
-    (provider, home, out.result())
+    (tokens(1), tokens(2), out.result())
   }
 
   // ------------------------------------------- wire -> typed raw events

@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
   *  - exact / bag dedup: one hash-shuffle on a 128-bit digest; group sizes
   *    are tiny (true duplicates), no skew risk beyond pathological
   *    empty-text keys.
-  *  - MinHash LSH: band signatures explode each doc into B rows (B=8 here),
-  *    the candidate join is a self-equi-join on (band, band_hash) — the
+  *  - MinHash LSH: band signatures explode each doc into B rows (B=4 here),
+  *    the candidate join is a self-equi-join on (band, key) — the
   *    classic shingle->minhash->band->bucket-join plan. Bucket sizes are
   *    bounded by near-duplicate cluster size, not corpus size; a
-  *    `count > threshold` guard drops degenerate buckets (boilerplate
-  *    spam) before the quadratic within-bucket pairing.
+  *    `count > cap` guard drops degenerate buckets (boilerplate spam)
+  *    before the quadratic within-bucket pairing ([[bucketPairs]], shared
+  *    with the embedding near-dup blocking of `Similarity`).
   *  - SimHash: 64-bit signature per doc; candidate pairs via banded 16-bit
   *    chunks, verified by Hamming distance.
   */
@@ -112,27 +113,25 @@ object Dedup {
           CAST(sum(n_chars) AS BIGINT) AS sum_chars
         FROM r WHERE rk = 1 GROUP BY lang ORDER BY lang""")),
 
-    // ----------------------------------- MinHash + LSH band join (no oracle:
-    // hash functions are engine-internal; driver does the rows-only check)
+    // ----------------------------------- MinHash + LSH band join: the
+    // candidate pairs of the arithmetic MinHash stage, which the oracle's
+    // shared CTE chain replays bit-for-bit
     QueryDef("q24_minhash_lsh",
-      (s, d) => minhashCandidates(s, T.load(s, d, "documents")),
-      None),
+      (s, d) => minhashCandidates(T.load(s, d, "documents"))
+        .orderBy(col("doc_a"), col("doc_b")),
+      Some(s"WITH $minhashCtes\nSELECT doc_a, doc_b FROM cand ORDER BY 1, 2")),
 
     // ------------------------------------------------ SimHash near-dup.
     // 64-bit word hashes come from md5 (60 bits from hex[1..15] + 4 from
-    // hex[16]) so the DuckDB oracle replays the identical signature;
-    // q24 keeps the engine-native xxhash64 family as the production
-    // showcase.
+    // hex[16]) so the DuckDB oracle replays the identical signature.
     QueryDef("q25_simhash",
       (s, d) => simhashCandidates(s, T.load(s, d, "documents")),
       Some(simhashOracle)),
 
     // ---------------------------- n-gram Jaccard verification of candidates.
-    // Candidate generation here uses the ARITHMETIC MinHash twin (polynomial
-    // LCG hashes instead of xxhash64) so the whole pipeline — shingle ->
+    // Candidates are q24's MinHash pairs, so the whole pipeline — shingle ->
     // minhash -> band -> bucket-join -> exact-Jaccard verify — is replayed
-    // verbatim by the DuckDB oracle. Same banding/cap as the production
-    // xxhash64 path (q24); the hash family is the only pluggable part.
+    // verbatim by the DuckDB oracle.
     QueryDef("q26_ngram_jaccard",
       (s, d) => ngramJaccard(s, T.load(s, d, "documents")),
       Some(ngramJaccardOracle))
@@ -206,20 +205,16 @@ object Dedup {
        |      (acc, c) -> (acc * 31 + c) % $HashM)""".stripMargin
 
 
-  /** Shared tail of every MinHash variant: per-doc signature columns
-    * m0..m{perms-1} -> banded fold keys -> capped bucket self-join ->
-    * distinct candidate pairs.
+  /** Capped bucket self-join: `rows` holds `(id, band, key)`; every pair
+    * of ids sharing a (band, key) bucket of at most `cap` members becomes
+    * one `(a, b)` row with a < b, once however many bands it shares. The
+    * cap drops degenerate buckets (boilerplate, hot cells) before the
+    * quadratic within-bucket pairing. [[bucketPairsSql]] is its DuckDB
+    * twin.
     */
-  private def bandedCandidates(sig: DataFrame, perms: Int, bands: Int,
-      cap: Int): DataFrame = {
-    val rpb = perms / bands
-    val banded = sig.select(col("doc_id"),
-      explode(array((0 until bands).map { b =>
-        val key = (0 until rpb).foldLeft(lit(7L): Column)((acc, r) =>
-          pmod(acc * 131L + col(s"m${b * rpb + r}"), lit(BandM)))
-        struct(lit(b).as("band"), key.as("key"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.key"))
+  private[graft] def bucketPairs(rows: DataFrame, cap: Int, a: String,
+      b: String): DataFrame = {
+    val sized = rows
       .withColumn("bn",
         count(lit(1)).over(Window.partitionBy("band", "key")))
       .filter(col("bn") <= cap)
@@ -227,44 +222,23 @@ object Dedup {
       // the final sort's range sampler then read the same shuffle output
       // (AQE stage reuse) instead of re-executing the signature subtree
       .repartition(col("band"), col("key"))
-    val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("key"))
-    val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("key"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
+    sized.select(col("id").as(a), col("band"), col("key"))
+      .join(sized.select(col("id").as(b), col("band"), col("key")),
+        Seq("band", "key"))
+      .filter(col(a) < col(b))
+      .select(col(a), col(b))
       .distinct()
   }
 
-  /** MinHash candidates, xxhash64 production path. Each shingle is
-    * string-hashed ONCE (not once per permutation); the `perms`
-    * permutations are universal int hashes (a_p*h + b_p mod 2^31-1) over
-    * the exploded shingle hashes, aggregated as `perms` codegen'd MIN
-    * columns with map-side partial aggregation — the shape that holds at
-    * 100 TB (no interpreted per-permutation array pass, one narrow
-    * shuffle of pre-aggregated per-doc rows).
-    */
-  def minhashCandidates(s: SparkSession, docs: DataFrame,
-      perms: Int = 32, bands: Int = 8): DataFrame = {
-    // shingle hash WITHOUT building shingle strings: multi-arg xxhash64
-    // chains the three word hashes (seed feeding), so no concat_ws string
-    // allocation per shingle — measured 2.3s of 2.9s at sf0.1 was string
-    // construction. Distinctness of shingles is irrelevant under min().
-    val k = size(col("ws")) - 2
-    val hmExpr = when(k > 0, transform(sequence(lit(0), k - 1), g =>
-      pmod(xxhash64(element_at(col("ws"), g + 1),
-        element_at(col("ws"), g + 2),
-        element_at(col("ws"), g + 3)), lit(BandM))))
-      .otherwise(array(pmod(xxhash64(col("text")), lit(BandM))))
-    val hm = docs.select(col("doc_id"), col("text"),
-        split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), explode(hmExpr).as("hm"))
-    val permCols = (0 until perms).map(p =>
-      min(pmod(col("hm") * (2 * p + 3) + (7 * p + 1), lit(BandM))).as(s"m$p"))
-    val sig = hm.groupBy(col("doc_id"))
-      .agg(permCols.head, permCols.tail: _*)
-    bandedCandidates(sig, perms, bands, cap = 64)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  /** `sized` and `cand` CTEs of [[bucketPairs]] over the CTE `rows`. */
+  private[operators] def bucketPairsSql(rows: String, cap: Int, a: String,
+      b: String): String =
+    s"""sized AS (SELECT *, count(*) OVER (PARTITION BY band, key) AS bn
+       |  FROM $rows),
+       |cand AS (SELECT DISTINCT x.id AS $a, y.id AS $b
+       |  FROM sized x JOIN sized y
+       |    ON x.band = y.band AND x.key = y.key AND x.id < y.id
+       |  WHERE x.bn <= $cap AND y.bn <= $cap)""".stripMargin
 
   /** 64-bit SimHash from word-feature hashes; near-dup candidates = equal
     * 16-bit chunk (4-banded) verified by Hamming distance <= 6.
@@ -364,13 +338,16 @@ object Dedup {
     s"(CAST('0x' || substring(md5($e), 1, 15) AS BIGINT) % $HashM)"
 
 
-  /** MinHash candidates from the ARITHMETIC hash family: word-composed
-    * shingle hashes -> 16 LCG-permuted codegen'd MIN columns -> 4 banded
-    * fold-keys -> capped bucket self-join. Structurally identical to
-    * [[minhashCandidates]]; the hash family alone differs so the DuckDB
-    * oracle can replay it bit-for-bit.
+  /** MinHash candidate pairs `(doc_a, doc_b)`: word-composed shingle
+    * hashes -> 16 LCG-permuted codegen'd MIN columns -> 4 banded fold-keys
+    * -> capped bucket self-join. Every hash is integer arithmetic over md5
+    * word digests, so the DuckDB oracle ([[minhashCtes]]) replays it
+    * bit-for-bit. The 16 permutations are universal hashes over the
+    * exploded shingle hashes, aggregated as codegen'd MIN columns with
+    * map-side partial aggregation — one narrow shuffle of pre-aggregated
+    * per-doc rows.
     */
-  def minhashCandidatesArith(docs: DataFrame): DataFrame = {
+  def minhashCandidates(docs: DataFrame): DataFrame = {
     // WINDOW-LEAD shingle composition: posexplode the words, hash each
     // occurrence with a CODEGEN'D md5 projection, then compose the
     // 3-shingle hash from lead(wh,1)/lead(wh,2) over (doc_id, pos) — the
@@ -408,9 +385,17 @@ object Dedup {
       .filter(col("hm").isNotNull)
     val permCols = (0 until JacPerms).map(p =>
       min(pmod(col("hm") * (2 * p + 3) + (7 * p + 1), lit(HashM))).as(s"m$p"))
-    val sig = hm.groupBy(col("doc_id"))
+    val rpb = JacPerms / JacBands
+    val keys = hm.groupBy(col("doc_id"))
       .agg(permCols.head, permCols.tail: _*)
-    bandedCandidates(sig, JacPerms, JacBands, JacCap)
+      .select(col("doc_id").as("id"),
+        explode(array((0 until JacBands).map { b =>
+          val key = (0 until rpb).foldLeft(lit(7L): Column)((acc, r) =>
+            pmod(acc * 131L + col(s"m${b * rpb + r}"), lit(BandM)))
+          struct(lit(b).as("band"), key.as("key"))
+        }: _*)).as("bb"))
+      .select(col("id"), col("bb.band"), col("bb.key"))
+    bucketPairs(keys, JacCap, "doc_a", "doc_b")
   }
 
   /** Exact n-gram Jaccard over arithmetic-MinHash candidates (verify
@@ -418,7 +403,7 @@ object Dedup {
     * arrays re-join after.
     */
   def ngramJaccard(s: SparkSession, docs: DataFrame): DataFrame = {
-    val cands = minhashCandidatesArith(docs)
+    val cands = minhashCandidates(docs)
     // verify on the (bounded) candidate pairs with per-DOC distinct shingle
     // sets built ONCE via the same codegen window-lead shape as the
     // signature stage — the old per-pair HOF shingle build evaluated
@@ -472,10 +457,12 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** DuckDB mirror of [[ngramJaccard]] — same shingles, polynomial hashes,
-    * permutations, band folds, bucket cap and Jaccard verify.
+  /** DuckDB mirror of [[minhashCandidates]], the CTE chain `w` .. `cand`:
+    * same word hashes, shingle folds, permutations, band folds and bucket
+    * cap. `cand` holds the candidate pairs (q24); `w` the split words
+    * (q26's shingle sets).
     */
-  private lazy val ngramJaccardOracle: String = {
+  private lazy val minhashCtes: String = {
     val rpb = JacPerms / JacBands
     val permCols = (0 until JacPerms).map { p =>
       s"list_min(list_transform(hms, hh -> (hh * ${2 * p + 3} + ${7 * p + 1}) % $HashM)) AS m$p"
@@ -487,12 +474,8 @@ object Dedup {
     }.mkString(",\n      ")
     val keyCase = (0 until JacBands).map(b =>
       s"WHEN $b THEN k$b").mkString(" ")
-    s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words
+    s"""w AS (SELECT doc_id, text, string_split(text, ' ') AS words
        |  FROM documents),
-       |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
-       |    THEN list_transform(generate_series(1, CAST(len(words) - 2 AS INT)),
-       |      g -> concat_ws(' ', words[g], words[g+1], words[g+2]))
-       |    ELSE [text] END) AS sh FROM w),
        |wh AS (SELECT doc_id, len(words) AS nw, list_transform(words, wx ->
        |    ${mdWordHashSql("wx")}) AS whs FROM w),
        |hs AS (SELECT doc_id, CASE WHEN nw >= 3
@@ -506,14 +489,20 @@ object Dedup {
        |keys AS (SELECT doc_id,
        |      $keyCols
        |  FROM sig),
-       |bands AS (SELECT doc_id, band, CASE band $keyCase END AS key
+       |bands AS (SELECT doc_id AS id, band, CASE band $keyCase END AS key
        |  FROM keys, (SELECT unnest([${(0 until JacBands).mkString(", ")}]) AS band)),
-       |sized AS (SELECT *, count(*) OVER (PARTITION BY band, key) AS bn
-       |  FROM bands),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM sized a JOIN sized b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-       |  WHERE a.bn <= $JacCap AND b.bn <= $JacCap),
+       |${bucketPairsSql("bands", JacCap, "doc_a", "doc_b")}""".stripMargin
+  }
+
+  /** DuckDB mirror of [[ngramJaccard]]: the [[minhashCtes]] candidates,
+    * same shingle sets and Jaccard verify.
+    */
+  private lazy val ngramJaccardOracle: String =
+    s"""WITH $minhashCtes,
+       |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(words) >= 3
+       |    THEN list_transform(generate_series(1, CAST(len(words) - 2 AS INT)),
+       |      g -> concat_ws(' ', words[g], words[g+1], words[g+2]))
+       |    ELSE [text] END) AS sh FROM w),
        |j AS (SELECT doc_a, doc_b,
        |    len(list_intersect(sa.sh, sb.sh)) AS inter,
        |    len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)) AS uni
@@ -524,5 +513,4 @@ object Dedup {
        |  round(CAST(inter AS DOUBLE) / uni, 6) AS jaccard
        |FROM j WHERE round(CAST(inter AS DOUBLE) / uni, 6) >= $JacThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`embedding:
@@ -26,6 +25,55 @@ object Similarity {
     sqrt(aggregate(a, lit(0.0),
       (acc, v) => acc + v.cast("double") * v.cast("double")))
 
+  /** Cosine of `a` and `b` from their precomputed L2 norms, rounded to 4
+    * places — the one score of q33, q40, q47 and q48 ([[cosineSql]] is its
+    * DuckDB twin).
+    */
+  private def cosine(a: Column, aNorm: Column, b: Column, bNorm: Column)
+      : Column =
+    round(dot(a, b) / (aNorm * bNorm), 4)
+
+  /** DuckDB twin of [[cosine]] over the list expressions `a` and `b`. */
+  private def cosineSql(a: String, b: String): String = {
+    def sqNorm(v: String) =
+      s"sqrt(list_sum(list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+    s"""round(list_sum(list_transform(list_zip($a, $b),
+       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) /
+       |    (${sqNorm(a)} * ${sqNorm(b)}), 4)""".stripMargin
+  }
+
+  /** Exact-cosine top-k of `cands` (`vec_id`, `label`, `embedding`, the
+    * query row excluded) against the embedding of `queryVecId` in `e`:
+    * `(vec_id, label, cosine)` by cosine desc, vec_id. The query vector and
+    * its norm — an interpreted higher-order aggregate — are computed ONCE
+    * inside the single-row broadcast, not once per scanned row (norm is
+    * pure, so the double math is identical). [[cosineTopKSql]] is its
+    * DuckDB twin.
+    */
+  private def cosineTopK(cands: DataFrame, e: DataFrame, queryVecId: Long,
+      k: Int): DataFrame = {
+    val q = e.filter(col("vec_id") === queryVecId)
+      .select(col("embedding").as("q_emb"), norm(col("embedding")).as("q_norm"))
+    cands.crossJoin(broadcast(q))
+      .withColumn("cosine", cosine(col("embedding"), norm(col("embedding")),
+        col("q_emb"), col("q_norm")))
+      .select(col("vec_id"), col("label"), col("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+      .limit(k)
+  }
+
+  /** DuckDB twin of [[cosineTopK]] for query vector 0 and k = 10 over the
+    * candidate ids `cands` (a query yielding `vec_id`), after the CTEs
+    * `ctes` it reads.
+    */
+  private def cosineTopKSql(cands: String, ctes: String*): String =
+    s"""WITH ${(ctes :+ s"c AS ($cands)").mkString(",\n")},
+       |qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
+       |SELECT e.vec_id, e.label, ${cosineSql("e.embedding", "q_emb")} AS cosine
+       |FROM embeddings e JOIN c USING (vec_id), qe
+       |WHERE e.vec_id <> 0
+       |ORDER BY cosine DESC, e.vec_id LIMIT 10""".stripMargin
+
   // q40 LSH parameters — declared BEFORE `defs` (object init order: the
   // oracle string is built while `defs` is constructed)
   private val NdPlanes = 16
@@ -49,32 +97,9 @@ object Similarity {
     QueryDef("q33_cosine_topk",
       (s, d) => {
         val e = T.load(s, d, "embeddings")
-        // the query vector's norm — an interpreted higher-order aggregate —
-        // is computed ONCE inside the single-row broadcast, not once per
-        // scanned corpus row (norm is pure, so the double math is identical)
-        val q = e.filter(col("vec_id") === 0)
-          .select(col("embedding").as("q_emb"),
-            norm(col("embedding")).as("q_norm"))
-        e.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .withColumn("cosine", round(
-            dot(col("embedding"), col("q_emb")) /
-              (norm(col("embedding")) * col("q_norm")), 4))
-          .select(col("vec_id"), col("label"), col("cosine"))
-          .orderBy(col("cosine").desc, col("vec_id"))
-          .limit(10)
+        cosineTopK(e.filter(col("vec_id") =!= 0), e, 0, 10)
       },
-      Some("""WITH q AS (SELECT embedding AS q_emb FROM embeddings
-          WHERE vec_id = 0)
-        SELECT vec_id, label, round(
-          list_sum(list_transform(list_zip(embedding, q_emb),
-            p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) /
-          (sqrt(list_sum(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-           sqrt(list_sum(list_transform(q_emb,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
-        FROM embeddings, q WHERE vec_id <> 0
-        ORDER BY cosine DESC, vec_id LIMIT 10""")),
+      Some(cosineTopKSql("SELECT vec_id FROM embeddings"))),
 
     // ----------------------- centroid distance per label (IVF coarse step).
     // Fully deterministic: the centroid is built from EXACT integer
@@ -231,14 +256,13 @@ object Similarity {
     // corpus), each round is two narrow (id,id) joins + a min-agg on that
     // small set with `localCheckpoint` truncating lineage between rounds,
     // and convergence (sum of labels is strictly decreasing until
-    // fixpoint) is asserted within the round bound — loudly, not silently
-    // truncated. Each round combines neighbor-min propagation with a
-    // POINTER-DOUBLING shortcut (lbl(v) <- lbl(lbl(v)), the Shiloach-
-    // Vishkin / large-star move): label chains halve every round, so
-    // convergence needs O(log diameter) rounds, not O(diameter) — plain
-    // propagation measured non-convergent in 16 rounds on the sf0.1 pair
-    // graph, where chained LSH near-dup pairs exceed diameter 16, while
-    // the doubled variant closes the same graph in <= 6.
+    // fixpoint) is asserted within the 20-round bound — loudly, not
+    // silently truncated. Each round combines neighbour-min propagation
+    // with a pointer shortcut (lbl(v) <- lbl(lbl(v))). The shortcut only
+    // halves a chain whose ids are sorted along it; on a chain with
+    // shuffled ids the rounds grow with its diameter, so q59 throws on a
+    // long enough near-dup chain (a 100-vertex shuffled path already
+    // exceeds 20 rounds; ROADMAP direction 1 holds the fix).
     QueryDef("q59_dedup_clusters",
       (s, d) => {
         val pairs = neardupLsh(s, T.load(s, d, "embeddings"))
@@ -327,11 +351,13 @@ object Similarity {
 
   /** Connected components over an undirected pair list: returns
     * `(v, lbl)` with `lbl` = the smallest vertex id reachable from `v`.
-    * Min-label propagation with a POINTER-DOUBLING shortcut per round
-    * (see the q59 comment above): O(log diameter) rounds, each one two
-    * narrow joins + a min-agg with `localCheckpoint` truncating lineage.
-    * Convergence is asserted loudly within `maxIters` — a silently
-    * truncated clustering never escapes.
+    * Min-label propagation with a pointer shortcut per round (see the q59
+    * comment above), each round one narrow join + a min-agg with
+    * `localCheckpoint` truncating lineage. The rounds are logarithmic in
+    * the diameter only when ids are sorted along the chains; with shuffled
+    * ids they grow with the diameter (ROADMAP direction 1). Convergence is
+    * asserted loudly within `maxIters` — a silently truncated clustering
+    * never escapes.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): DataFrame = {
@@ -376,10 +402,9 @@ object Similarity {
       // AND applies the pointer-doubling shortcut — min over
       // {lbl(u): u in N(v)} ∪ {lbl(lbl(v))}, and lbl(lbl(v)) <= lbl(v)
       // because labels are monotone (lbl <= id pointwise by induction).
-      // Label chains still halve per round (O(log diameter) rounds, the
-      // Shiloach-Vishkin large-star move); the old 3-join round (nbr-min,
-      // left-join merge, pointer self-join that re-executed its input
-      // twice) collapses into one shuffle-free stage at driver scale.
+      // The old 3-join round (nbr-min, left-join merge, pointer self-join
+      // that re-executed its input twice) collapses into one shuffle-free
+      // stage at driver scale.
       // Every v survives the inner join: its pointer edge (v, lbl(v))
       // always matches lbl(v)'s own label row.
       val aug = part(
@@ -479,28 +504,16 @@ object Similarity {
 
   def neardupLsh(s: SparkSession, e: DataFrame): DataFrame = {
     val bits = NdPlanes / NdBands
-    val sig = intLshSignature(e, NdPlanes)
-    val banded = sig.select(col("vec_id"),
+    val banded = intLshSignature(e, NdPlanes).select(col("vec_id").as("id"),
       explode(array((0 until NdBands).map { b =>
         struct(lit(b).as("band"),
           shiftright(col("sig"), b * bits)
-            .bitwiseAND((1L << bits) - 1).as("chunk"))
+            .bitwiseAND((1L << bits) - 1).as("key"))
       }: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band"), col("bb.chunk"))
-      .withColumn("bn",
-        count(lit(1)).over(Window.partitionBy("band", "chunk")))
-      .filter(col("bn") <= NdBucketCap)
-      // one materialized exchange feeds both self-join sides + the sort
-      // sampler (AQE stage reuse — the signature subtree runs ONCE)
-      .repartition(col("band"), col("chunk"))
+      .select(col("id"), col("bb.band"), col("bb.key"))
     // candidate pairs stay NARROW (ids only) through distinct; embeddings
     // re-join after — the shuffle moves 16-byte pairs, not 256-byte vectors
-    val a = banded.select(col("vec_id").as("vec_a"), col("band"), col("chunk"))
-    val b = banded.select(col("vec_id").as("vec_b"), col("band"), col("chunk"))
-    val cand = a.join(b, Seq("band", "chunk"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
-      .distinct()
+    val cand = Dedup.bucketPairs(banded, NdBucketCap, "vec_a", "vec_b")
     // ONE broadcast serves both embedding re-attach joins: the build-side
     // subtree is textually identical for both, so the second join reuses
     // the first's BroadcastExchange (ReusedExchange) instead of building
@@ -517,9 +530,8 @@ object Similarity {
       .join(broadcast(ee), col("vec_b") === col("eid"))
       .select(col("vec_a"), col("vec_b"), col("emb_a"), col("norm_a"),
         col("eemb").as("emb_b"), col("enorm").as("norm_b"))
-      .withColumn("cosine", round(
-        dot(col("emb_a"), col("emb_b")) /
-          (col("norm_a") * col("norm_b")), 4))
+      .withColumn("cosine",
+        cosine(col("emb_a"), col("norm_a"), col("emb_b"), col("norm_b")))
       .filter(col("cosine") >= NdThreshold)
       .select(col("vec_a"), col("vec_b"), col("cosine"))
       .orderBy(col("vec_a"), col("vec_b"))
@@ -533,27 +545,14 @@ object Similarity {
   private lazy val neardupCtes: String = {
     val bits = NdPlanes / NdBands
     val projTerms = intLshSigSql(NdPlanes)
-    val cos =
-      """round(
-        |      list_sum(list_transform(list_zip(ea.embedding, eb.embedding),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(ea.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(eb.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4)""".stripMargin
+    val cos = cosineSql("ea.embedding", "eb.embedding")
     s"""s AS (
        |  SELECT vec_id, $projTerms AS sig FROM embeddings),
        |banded AS (
-       |  SELECT vec_id, band,
-       |    (sig // ${s"CAST(power(2, band * $bits) AS BIGINT)"}) % ${1L << bits} AS chunk
+       |  SELECT vec_id AS id, band,
+       |    (sig // ${s"CAST(power(2, band * $bits) AS BIGINT)"}) % ${1L << bits} AS key
        |  FROM s, (SELECT unnest([${(0 until NdBands).mkString(", ")}]) AS band)),
-       |sized AS (
-       |  SELECT *, count(*) OVER (PARTITION BY band, chunk) AS bn FROM banded),
-       |cand AS (
-       |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM sized a JOIN sized b
-       |    ON a.band = b.band AND a.chunk = b.chunk AND a.vec_id < b.vec_id
-       |  WHERE a.bn <= $NdBucketCap AND b.bn <= $NdBucketCap),
+       |${Dedup.bucketPairsSql("banded", NdBucketCap, "vec_a", "vec_b")},
        |pairs AS (
        |  SELECT vec_a, vec_b, $cos AS cosine
        |  FROM cand
@@ -631,19 +630,9 @@ object Similarity {
     val probes = qSig.select(explode(array(
       col("q_sig") +: (0 until 8).map(b =>
         col("q_sig").bitwiseXOR(lit(1L << b))): _*)).as("p_sig"))
-    val qEmb = e.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_norm")) // once, in the broadcast
-    sig.filter(col("vec_id") =!= queryVecId)
+    cosineTopK(sig.filter(col("vec_id") =!= queryVecId)
       .join(broadcast(probes), col("sig") === col("p_sig"))
-      .join(e, Seq("vec_id"))
-      .crossJoin(broadcast(qEmb))
-      .withColumn("cosine", round(
-        dot(col("embedding"), col("q_emb")) /
-          (norm(col("embedding")) * col("q_norm")), 4))
-      .select(col("vec_id"), col("label"), col("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
+      .join(e, Seq("vec_id")), e, queryVecId, k)
   }
 
   /** IVF search: coarse-quantize by label centroid (exact integer
@@ -669,23 +658,14 @@ object Similarity {
       .groupBy(col("label")).agg(sum(col("d2e8")).as("qd2"))
       .orderBy(col("qd2"), col("label")).limit(nprobe)
       .select(col("label"))
-    val qEmb = e.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_norm")) // once, in the broadcast
-    e.join(broadcast(probed), Seq("label")) // partition-pruned scan at scale
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(broadcast(qEmb))
-      .withColumn("cosine", round(
-        dot(col("embedding"), col("q_emb")) /
-          (norm(col("embedding")) * col("q_norm")), 4))
-      .select(col("vec_id"), col("label"), col("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(e.join(broadcast(probed), Seq("label")) // partition-pruned at scale
+      .filter(col("vec_id") =!= queryVecId), e, queryVecId, k)
   }
 
   /** DuckDB mirror of [[ivfSearch]] (query vec 0, nprobe 2, k 10). */
   private lazy val ivfSearchOracle: String =
-    s"""WITH ex AS (SELECT label, vec_id,
+    cosineTopKSql("SELECT vec_id FROM embeddings JOIN top USING (label)",
+      """ex AS (SELECT label, vec_id,
        |    unnest(embedding) AS v,
        |    unnest(generate_series(0, len(embedding) - 1)) AS pos
        |  FROM embeddings),
@@ -698,18 +678,7 @@ object Similarity {
        |qd AS (SELECT label,
        |    CAST(sum(CAST(round((qv - c) * (qv - c) * 100000000, 0) AS BIGINT)) AS BIGINT) AS qd2
        |  FROM cj JOIN qv USING (pos) GROUP BY label),
-       |top AS (SELECT label FROM qd ORDER BY qd2, label LIMIT 2),
-       |qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-       |SELECT e.vec_id, e.label, round(
-       |    list_sum(list_transform(list_zip(e.embedding, q_emb),
-       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) /
-       |    (sqrt(list_sum(list_transform(e.embedding,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-       |     sqrt(list_sum(list_transform(q_emb,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
-       |FROM embeddings e JOIN top USING (label), qe
-       |WHERE e.vec_id <> 0
-       |ORDER BY cosine DESC, e.vec_id LIMIT 10""".stripMargin
+       |top AS (SELECT label FROM qd ORDER BY qd2, label LIMIT 2)""".stripMargin)
 
   /** DuckDB mirror of [[annProbe]] (query vec 0, k = 10, 8 planes,
     * Hamming-1 multi-probe).
@@ -717,20 +686,9 @@ object Similarity {
   private lazy val annProbeOracle: String = {
     val probeList = ("q_sig" +: (0 until 8).map(b =>
       s"xor(q_sig, ${1L << b})")).mkString(", ")
-    s"""WITH s AS (SELECT vec_id, ${intLshSigSql(8)} AS sig FROM embeddings),
-       |q AS (SELECT sig AS q_sig FROM s WHERE vec_id = 0),
-       |probes AS (SELECT unnest([$probeList]) AS p_sig FROM q),
-       |qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-       |SELECT e.vec_id, e.label, round(
-       |    list_sum(list_transform(list_zip(e.embedding, q_emb),
-       |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) /
-       |    (sqrt(list_sum(list_transform(e.embedding,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-       |     sqrt(list_sum(list_transform(q_emb,
-       |       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
-       |FROM s JOIN probes ON s.sig = probes.p_sig
-       |JOIN embeddings e ON e.vec_id = s.vec_id, qe
-       |WHERE s.vec_id <> 0
-       |ORDER BY cosine DESC, e.vec_id LIMIT 10""".stripMargin
+    cosineTopKSql("SELECT vec_id FROM s JOIN probes ON s.sig = probes.p_sig",
+      s"""s AS (SELECT vec_id, ${intLshSigSql(8)} AS sig FROM embeddings),
+         |q AS (SELECT sig AS q_sig FROM s WHERE vec_id = 0),
+         |probes AS (SELECT unnest([$probeList]) AS p_sig FROM q)""".stripMargin)
   }
 }

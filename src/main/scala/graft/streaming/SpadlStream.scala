@@ -5,9 +5,11 @@ import graft.convert.{InstatGameConverter, OptaGameConverter, SpadlPipeline}
 import graft.model._
 import graft.vaep.ValuationCore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import java.util.concurrent.TimeUnit
 
 /** Structured-Streaming CEP core (north star, BASELINE.json):
   * raw tokenized event rows -> SPADL -> VAEP, incrementally, keyed by
@@ -414,17 +416,13 @@ object SpadlStream {
         stateFn(intervalMs(sessionGap), emissionLagMs, lostUpgrades))
   }
 
-  private def intervalMs(s: String): Long = {
-    val Array(n, unit) = s.trim.split("\\s+")
-    val base = n.toLong
-    unit.toLowerCase match {
-      case u if u.startsWith("milli") => base
-      case u if u.startsWith("second") => base * 1000L
-      case u if u.startsWith("minute") => base * 60000L
-      case u if u.startsWith("hour") => base * 3600000L
-      case other => throw new IllegalArgumentException(other)
-    }
-  }
+  /** Milliseconds of an interval string such as "1 hour 30 minutes",
+    * parsed as `withWatermark` parses its delay; a malformed string fails
+    * with Spark's interval error.
+    */
+  private[graft] def intervalMs(s: String): Long =
+    IntervalUtils.getDuration(IntervalUtils.fromIntervalString(s),
+      TimeUnit.MILLISECONDS)
 
   /** Possession sessionization (W10): built-in session windows — actions
     * of the same (doc, team) within a 10 s gap form one possession.

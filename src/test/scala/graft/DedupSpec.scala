@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic guarantees of the dedup/similarity candidate generators that
-  * the driver only rows-only-checks (engine-internal hashes): exact
-  * duplicates are ALWAYS candidates (identical signatures survive any
-  * banding), near-duplicates verify above the Jaccard threshold, and
-  * unrelated docs don't flood the candidate set.
+  * the oracles check only on the test tables: exact duplicates are ALWAYS
+  * candidates (identical signatures survive any banding), near-duplicates
+  * verify above the Jaccard threshold, unrelated docs don't flood the
+  * candidate set, and the bucket cap drops exactly the oversized buckets.
   */
 class DedupSpec extends AnyFunSuite {
 
@@ -37,15 +37,27 @@ class DedupSpec extends AnyFunSuite {
     5L -> "tiny doc", // < 3 words: fallback shingle
     6L -> "tiny doc")
 
-  test("exact duplicates are always MinHash candidates (both hash families)") {
-    val xx = Dedup.minhashCandidates(spark, corpus)
+  test("exact duplicates are always MinHash candidates") {
+    val got = Dedup.minhashCandidates(corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(xx.contains((0L, 1L)), s"xxhash64 candidates missed (0,1): $xx")
-    assert(xx.contains((5L, 6L)), s"xxhash64 candidates missed (5,6): $xx")
-    val ar = Dedup.minhashCandidatesArith(corpus)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ar.contains((0L, 1L)), s"arith candidates missed (0,1): $ar")
-    assert(ar.contains((5L, 6L)), s"arith candidates missed (5,6): $ar")
+    assert(got.contains((0L, 1L)), s"candidates missed (0,1): $got")
+    assert(got.contains((5L, 6L)), s"candidates missed (5,6): $got")
+  }
+
+  test("bucket cap: an oversized bucket yields no pairs, a full one all " +
+    "of its pairs, and an id pair sharing two bands comes out once") {
+    import spark.implicits._
+    val cap = 4
+    val over = (0L to cap.toLong).map(id => (id, 0, 1L)) // cap + 1 ids
+    val full = (10L until 10L + cap).map(id => (id, 0, 2L)) // exactly cap
+    val twice = Seq((20L, 0, 3L), (21L, 0, 3L), (20L, 1, 3L), (21L, 1, 3L))
+    val rows = (over ++ full ++ twice).toDF("id", "band", "key")
+    val got = Dedup.bucketPairs(rows, cap, "a", "b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val fullPairs = for (x <- full.map(_._1); y <- full.map(_._1) if x < y)
+      yield (x, y)
+    assert(fullPairs.size == cap * (cap - 1) / 2)
+    assert(got.sorted == (fullPairs :+ ((20L, 21L))).sorted, s"pairs: $got")
   }
 
   test("near-duplicate pair verifies above the Jaccard threshold") {
@@ -92,46 +104,61 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.get((0L, 1L)).contains(1.0), s"exact pair cosine != 1: $pairs")
   }
 
-  test("connected components converge on a 64-vertex path within the " +
-    "O(log diameter) round bound (q59 regression: plain propagation " +
-    "needs 63 rounds here and fails the 16-round require)") {
+  /** Min reachable id per vertex of `pairs`, by a local union-find. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
+  private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    import spark.implicits._
+    Similarity.connectedComponents(pairs.toDF("a", "b"), "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("connected components converge on a 64-vertex path with ids " +
+    "sorted along it (q59 regression: plain propagation needs 63 rounds " +
+    "here and fails the 16-round require)") {
     import spark.implicits._
     // path 0-1-2-...-63 (diameter 63) plus one separate triangle and one
     // isolated pair: min-reachable labels are 0, 100, 200
     val path = (0L until 63L).map(i => (i, i + 1))
     val extra = Seq((100L, 101L), (101L, 102L), (100L, 102L), (200L, 201L))
-    val pairs = (path ++ extra).toDF("a", "b")
-    val lbl = Similarity.connectedComponents(pairs, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lbl = components(path ++ extra)
     (0L to 63L).foreach(v => assert(lbl(v) == 0L, s"path vertex $v -> ${lbl(v)}"))
     Seq(100L, 101L, 102L).foreach(v => assert(lbl(v) == 100L))
     Seq(200L, 201L).foreach(v => assert(lbl(v) == 200L))
   }
 
   test("connected components match a local union-find on random graphs") {
-    import spark.implicits._
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { g =>
       val n = 20 + rnd.nextInt(30)
       val pairs = Vector.fill(10 + rnd.nextInt(50))(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(p => p._1 != p._2)
-      // local union-find truth: min reachable id per vertex
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val truth = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-        .map(v => v -> find(v)).toMap
-      val got = Similarity.connectedComponents(
-          pairs.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = components(pairs)
+      val truth = unionFind(pairs)
       assert(got == truth, s"graph $g: spark=$got truth=$truth")
+    }
+  }
+
+  test("connected components on a 100-vertex path with shuffled ids match " +
+    "union-find (pending: the rounds grow with the diameter when ids are " +
+    "not sorted along the chain, so the 20-round bound throws; ROADMAP " +
+    "direction 1)") {
+    val ids = new scala.util.Random(7).shuffle((0L until 100L).toVector)
+    val path = ids.zip(ids.tail)
+    pendingUntilFixed {
+      assert(components(path) == unionFind(path))
     }
   }
 }

@@ -162,6 +162,18 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     assert(got.sortBy(key) == truth)
   }
 
+  test("session gap: a multi-unit interval builds the query, a malformed " +
+    "one fails with Spark's interval error") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val events = MemoryStream[SpadlStream.StreamEvent].toDS()
+    SpadlStream.valuedActions(spark, events, sessionGap = "1 hour 30 minutes")
+    assert(SpadlStream.intervalMs("1 hour 30 minutes") == 90 * 60000L)
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      SpadlStream.valuedActions(spark, events, sessionGap = "90 fortnights"))
+    assert(err.getMessage.toLowerCase.contains("interval"), err.getMessage)
+  }
+
   test("stream-stream keypass join sets assist/keypass flags like batch") {
     val games = FixtureGen.corpus(4, 100).filter(_.doc.source == "opta")
     assert(games.exists(_.keypasses.nonEmpty), "fixture has keypasses")
@@ -722,12 +734,12 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     // contract is that upstream co-locates each (game_id, action_idx) in
     // one partition (the stateful operator's keyed output does). If a
     // refactor slipped a repartition in front of the sink, duplicates
-    // could span partitions and slip through silently. verifyCoLocation
-    // makes that loud: the violating batch fails BEFORE its commit
-    // marker lands, so readers never see it (round-3 VERDICT #6).
+    // could span partitions and slip through silently. The co-location
+    // check makes that loud: the violating batch fails BEFORE its commit
+    // marker lands, so readers never see it.
     import spark.implicits._
     val dir = tempDir("graft_coloc").toString
-    val strict = new ExactlyOnceSink(dir, verifyCoLocation = true)
+    val strict = new ExactlyOnceSink(dir)
     val rows = batchTruth(FixtureGen.corpus(1, 60).map(_.copy(keypasses = Nil)))
     val df = spark.createDataset(rows).toDF()
     // healthy batch (unique keys) passes under any partitioning
@@ -745,13 +757,6 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     assert(strict.committedBatchIds() == Set(0L),
       "violating batch must stay uncommitted")
     assert(strict.read(spark).count() == rows.size)
-    // the same scattered batch with the check DISABLED documents why it
-    // exists: cross-partition duplicates survive the partition-local
-    // guard alone (the check is on by default since round 5 — it became
-    // a one-pass accumulator intersection, cheap enough for production)
-    val lax = new ExactlyOnceSink(s"$dir/lax", verifyCoLocation = false)
-    lax.write(scattered, 0L)
-    assert(lax.read(spark).count() == 2L * rows.size)
   }
 }
 

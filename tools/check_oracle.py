@@ -3,7 +3,7 @@
 run `sbt "runMain graft.Verify <sfDir> <outDir>"` first, then this script
 compares each <outDir>/<name> parquet against the oracle SQL executed by
 DuckDB over the same sf tables (columns sorted by name, rows sorted, values
-hashed)."""
+hashed), then lists the outputs that have no oracle entry (rows-only)."""
 import sys, json, glob, os
 import duckdb
 
@@ -73,4 +73,9 @@ for name, sql in sorted(oracle.items()):
     else:
         print(f"OK       {name} rows={len(exp)}")
 print(f"\n{len(oracle) - fail}/{len(oracle)} oracle queries match")
+# Verify outputs with no oracle entry: checked for rows only
+rows_only = sorted(os.path.basename(d.rstrip("/"))
+                   for d in glob.glob(f"{outdir}/*/")
+                   if os.path.basename(d.rstrip("/")) not in oracle)
+print(f"{len(rows_only)} rows-only outputs (no oracle): {' '.join(rows_only)}")
 sys.exit(1 if fail else 0)

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
 /** Deterministic winner when one event has several keypass rows (e.g. both
   * 'key' and 'assisst'): prefer 'assisst' over 'key' over anything else,
   * ties by string. Used by BOTH the batch path (collect_list order is
-  * nondeterministic) and the streaming path (stream-stream join delivery
-  * order is nondeterministic) so batch == stream bitwise parity holds.
+  * nondeterministic) and the streaming state function (which applies a
+  * game's stored keypass rows, delivered in any order, when it converts)
+  * so batch == stream bitwise parity holds.
   */
 object KpWinner {
   def rank(pt: String): Int = pt match {

@@ -25,7 +25,8 @@ final case class TokenDoc(
 
 /** Keypass/assist side-stream row — mirrors the `playerKeyPasses` Mongo
   * collection joined at /root/reference/R/opta_events.R:26-30. In streaming
-  * this is the "outcome/label stream" of the stream-stream join.
+  * these rows are the keypass stream that the per-game state keeps and
+  * applies (`SpadlStream.valuedActions`).
   */
 final case class KeypassRow(
     doc_id: String,

@@ -39,12 +39,12 @@ object StateStores {
     *    to the checkpoint; the full RocksDB snapshot is uploaded
     *    asynchronously by the maintenance thread. Without it every
     *    micro-batch commit re-snapshots the ENTIRE store — O(state) per
-    *    batch instead of O(delta) — which is exactly the cost the
-    *    stream-stream join's event-buffer state cannot afford.
+    *    batch instead of O(delta) — a cost a large per-game state
+    *    cannot afford.
     *  - trackTotalNumberOfRows=false: skips the extra get-per-put used
-    *    only for the numRowsTotal metric; a pure-insert workload (join
-    *    buffers, session state) pays ~2x write amplification for a
-    *    progress-log nicety otherwise.
+    *    only for the numRowsTotal metric; a put-heavy workload (session
+    *    state) pays ~2x write amplification for a progress-log nicety
+    *    otherwise.
     */
   val RocksDBConfs: Map[String, String] = Map(
     ProviderConf -> RocksDBProvider,

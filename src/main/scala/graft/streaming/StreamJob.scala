@@ -16,14 +16,17 @@ object StreamJob {
     * {"batchId":3,"inputRows":1200,"stateRows":64,"lateRows":0,
     *  "lostUpgrades":0,"watermark":"2024-01-01T00:41:10.000Z",
     *  "durationMs":{"addBatch":410,"walCommit":2,"commitOffsets":2,
-    *                "triggerExecution":470},"stateCommitMs":9}
+    *                "triggerExecution":470},"stateCommitMs":9,
+    *  "stateMemoryBytes":1843200}
     * }}}
     * `inputRows`, `lateRows` (rows Spark dropped as behind the watermark,
     * `numRowsDroppedByWatermark`), `lostUpgrades` and `stateCommitMs` (the
     * state operators' `commitTimeMs`) count that batch; `stateRows` is the
-    * state size after it. When [[start]] is given the listener it wires in
-    * the engine's lost-keypass-upgrade accumulator, so a parity-margin
-    * break is visible per batch instead of only inside state unit tests.
+    * state size after it and `stateMemoryBytes` the memory the state
+    * stores report using then (the sum of their `memoryUsedBytes`). When
+    * [[start]] is given the listener it wires in the engine's
+    * lost-keypass-upgrade accumulator, so a parity-margin break is visible
+    * per batch instead of only inside state unit tests.
     */
   final class EmitMetricsListener(emit: String => Unit = println(_))
       extends StreamingQueryListener {
@@ -62,7 +65,8 @@ object StreamJob {
           ("walCommit" -> ms("walCommit")) ~
           ("commitOffsets" -> ms("commitOffsets")) ~
           ("triggerExecution" -> ms("triggerExecution"))) ~
-        ("stateCommitMs" -> so.map(_.commitTimeMs).sum)
+        ("stateCommitMs" -> so.map(_.commitTimeMs).sum) ~
+        ("stateMemoryBytes" -> so.map(_.memoryUsedBytes).sum)
       lostBefore = lost
       emit(org.json4s.jackson.JsonMethods.compact(line))
     }

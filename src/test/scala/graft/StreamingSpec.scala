@@ -100,7 +100,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       if (withKeypass) {
-        // keypass rows go in first so the left join matches within bounds
+        // keypass rows go in first: none arrives behind the watermark
         games.flatMap(_.keypasses).foreach { k =>
           kpMem.addData((k.doc_id, k.event_id, k.pass_type,
             new Timestamp(Base + (k.event_time_sec * 1000).toLong)))
@@ -112,7 +112,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
         q.processAllAvailable()
       }
       // far-future sentinels: 1st advances max event time, 2nd's batch sees
-      // the advanced watermark (and flushes any outer-join holds), 3rd's
+      // the advanced watermark, 3rd's
       // batch fires the session timeouts for keys whose data arrived in 2nd
       // the global watermark is the MIN across both inputs: sentinels must
       // advance the keypass stream too when it participates
@@ -184,10 +184,72 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     assert(got.size == truth.size)
     got.zip(truth).foreach { case (a, b) => assert(a == b, s"${key(a)}") }
     assert(got.exists(_.keypass) || got.exists(_.assist))
-    // every keypass upgrade must land while its event is still buffered —
-    // a nonzero count means the emission lag no longer covers the join's
-    // release bound (silent parity loss made observable, round-2 ADVICE)
+    // every keypass must reach the state while its events are unemitted —
+    // a nonzero count means the emission lag no longer covers the keypass
+    // window (silent parity loss made observable, round-2 ADVICE)
     assert(lost.value == 0L, s"lost keypass upgrades: ${lost.value}")
+  }
+
+  test("keypass arrival order and window edges") {
+    // K1 arrives one micro-batch after its event, once the watermark has
+    // passed the event, K2 before its event; K3 sits exactly on the +30 s
+    // edge of its event's window and K4 1 ms past it. The batch path
+    // ignores keypass times, so the expected output is the batch truth
+    // with K1-K3 and without K4.
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val g = FixtureGen.corpus(4, 100).find(_.doc.source == "opta").get
+    def t(e: SpadlStream.StreamEvent) = e.event_time.getTime
+    val all = SpadlStream.toStreamEvents(g.doc, Base).sortBy(e => (t(e), e.seq))
+    val passes = all.filter(e => e.group(1) == 1 && e.group(2) == 1)
+    val Seq(e2, e3, e4, e1) = Seq(2, 5, 8, 11).map(passes)
+    val k1 = (e1, "key", t(e1) + 25000L)
+    val k2 = (e2, "assisst", t(e2))
+    val k3 = (e3, "key", t(e3) + SpadlStream.KeypassWindowMs)
+    val k4 = (e4, "key", t(e4) + SpadlStream.KeypassWindowMs + 1)
+    def truthWith(kps: Seq[(SpadlStream.StreamEvent, String, Long)]) =
+      batchTruth(Seq(g.copy(keypasses = kps.map { case (e, pt, _) =>
+        KeypassRow(g.doc.doc_id, e.group(0), pt, 0.0)
+      }))).sortBy(key)
+    val truth = truthWith(Seq(k1, k2, k3))
+    assert(truth != truthWith(Nil) && truth != truthWith(Seq(k1, k2, k3, k4)),
+      "the chosen keypasses must change the flags")
+    val mem = MemoryStream[SpadlStream.StreamEvent]
+    val kpMem = MemoryStream[(String, Int, String, Timestamp)]
+    def addKp(k: (SpadlStream.StreamEvent, String, Long)): Unit =
+      kpMem.addData((g.doc.doc_id, k._1.group(0), k._2, new Timestamp(k._3)))
+    val out = SpadlStream.valuedActions(spark, mem.toDS(),
+      Some(kpMem.toDS().toDF("doc_id", "event_id", "pass_type", "event_time")),
+      sessionGap = "10 minutes")
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("stream_kp_edges").start()
+    try {
+      // a far-ahead row of another doc keeps the keypass input from holding
+      // the global watermark (the minimum over both inputs) below the events'
+      Seq(k2, k3, k4).foreach(addKp)
+      kpMem.addData(("998", -1, "none", new Timestamp(Base + 86400000L)))
+      q.processAllAvailable()
+      // events up to 20 s past E1, then a redelivery of the last one: the
+      // game's state runs again under a watermark (10 s behind the events)
+      // past E1 and an event after it, so only the 30 s emission lag keeps
+      // E1 from being emitted before K1 arrives
+      val (h, rest) = all.span(e => t(e) <= t(e1) + 20000L)
+      assert(h.exists(e => t(e) > t(e1) && t(e) < t(h.last) - 10000L),
+        "fixture: no event between E1 and the watermark")
+      mem.addData(h); q.processAllAvailable()
+      mem.addData(Seq(h.last)); q.processAllAvailable()
+      addKp(k1); mem.addData(rest); q.processAllAvailable()
+      for (d <- 30 to 32) {
+        mem.addData(sentinel(d - 29, d))
+        kpMem.addData(("998", -1, "none", new Timestamp(Base + d * 86400000L)))
+        q.processAllAvailable()
+      }
+      assert(q.lastProgress.stateOperators.length == 1)
+      val got = spark.table("stream_kp_edges").as[ValuedAction]
+        .collect().toSeq.sortBy(key)
+      assert(got.size == truth.size)
+      got.zip(truth).foreach { case (a, b) => assert(a == b, s"${key(a)}") }
+    } finally q.stop()
   }
 
   test("duplicate deliveries are idempotent; late rows are dropped") {
@@ -352,49 +414,74 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       .distinct().count() == rows.size)
   }
 
-  /** Runs the first half of three games through [[StreamJob.start]], stops,
+  /** Runs the first half of `games` through [[StreamJob.start]], stops,
     * lands the rest and the sentinels, and restarts from the same
     * checkpoint; the sink must equal the batch truth with unique keys.
     * `firstFs` binds the `file:` AbstractFileSystem for the first run only;
-    * the restart runs under the binding `StreamJob.start` picks.
+    * the restart runs under the binding `StreamJob.start` picks. With
+    * `withKeypass` both runs also read the games' keypasses as a parquet
+    * stream, as `SubmitMain stream ... <keypassDir>` does, each landing
+    * with its event's half, and no keypass may miss its event.
     */
-  private def assertResumes(firstFs: Option[String]): Unit = {
+  private def assertResumes(firstFs: Option[String],
+      games: Seq[FixtureGen.Game] = FixtureGen.corpus(3, 60),
+      withKeypass: Boolean = false): Unit = {
     import spark.implicits._
-    val games = FixtureGen.corpus(3, 60)
-    val truth = batchTruth(games.map(_.copy(keypasses = Nil))).sortBy(key)
+    val truth = batchTruth(
+      if (withKeypass) games else games.map(_.copy(keypasses = Nil))).sortBy(key)
     val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, Base))
       .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
     val tmp = tempDir("graft_resume")
     val srcDir = s"$tmp/src"
+    val kpDir = s"$tmp/kp"
     val outDir = s"$tmp/out"
     val ckDir = s"$tmp/ck"
     val (h, t) = all.splitAt(all.size / 2)
     spark.createDataset(h).repartition(1).write.parquet(s"$srcDir/p1")
+    def writeKp(rows: Seq[(String, Int, String, Timestamp)], name: String) =
+      rows.toDF("doc_id", "event_id", "pass_type", "event_time")
+        .repartition(1).write.parquet(s"$kpDir/$name")
+    val inFirst = h.map(e => (e.doc_id, e.group(0))).toSet
+    val (kp1, kp2) = games.flatMap(_.keypasses).map(k =>
+      (k.doc_id, k.event_id, k.pass_type,
+        new Timestamp(Base + (k.event_time_sec * 1000).toLong)))
+      .partition(k => inFirst((k._1, k._2)))
+    if (withKeypass) writeKp(kp1, "p1")
     def stream = spark.readStream
       .schema(spark.createDataset(all).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/*")
       .as[SpadlStream.StreamEvent]
+    def keypass = if (!withKeypass) None else Some(spark.readStream
+      .schema("doc_id string, event_id int, pass_type string, event_time timestamp")
+      .parquet(s"$kpDir/*"))
     val fsKey = graft.streaming.ForkFreeLocalFs.ImplKey
+    val metrics1, metrics2 = new StreamJob.EmitMetricsListener
     // phase 1: process first half, then "crash" (stop)
     try {
       firstFs.foreach(spark.conf.set(fsKey, _))
-      val q1 = StreamJob.start(spark, stream, outDir, ckDir,
-        trigger = Trigger.AvailableNow())
+      val q1 = StreamJob.start(spark, stream, outDir, ckDir, keypass,
+        trigger = Trigger.AvailableNow(), metrics = Some(metrics1))
       assert(firstFs.forall(spark.conf.getOption(fsKey).contains),
         "StreamJob.start replaced the session's own binding")
       q1.awaitTermination(120000)
       q1.stop()
     } finally if (firstFs.nonEmpty) spark.conf.unset(fsKey)
-    // phase 2: second half + sentinels land, restart from checkpoint
+    // phase 2: second half + sentinels land, restart from checkpoint; the
+    // keypass stream needs sentinels too, the watermark being the minimum
+    // over both inputs
     spark.createDataset(t).repartition(1).write.parquet(s"$srcDir/p2")
     spark.createDataset(Seq(sentinel(1, 30))).write.parquet(s"$srcDir/p3")
     spark.createDataset(Seq(sentinel(2, 31))).write.parquet(s"$srcDir/p4")
     spark.createDataset(Seq(sentinel(3, 32))).write.parquet(s"$srcDir/p5")
-    val q2 = StreamJob.start(spark, stream, outDir, ckDir,
-      trigger = Trigger.AvailableNow())
+    if (withKeypass) writeKp(kp2 ++ (30 to 32).map(d =>
+      ("998", -1, "none", new Timestamp(Base + d * 86400000L))), "p2")
+    val q2 = StreamJob.start(spark, stream, outDir, ckDir, keypass,
+      trigger = Trigger.AvailableNow(), metrics = Some(metrics2))
     q2.awaitTermination(180000)
     q2.stop()
+    assert(metrics1.lostUpgrades == 0L && metrics2.lostUpgrades == 0L,
+      s"lost keypass upgrades: ${metrics1.lostUpgrades} ${metrics2.lostUpgrades}")
     val raw = new ExactlyOnceSink(outDir).read(spark)
     val got = raw.drop("_lineage_partition", "_batch_id")
       .as[ValuedAction].collect().toSeq.sortBy(key)
@@ -407,6 +494,12 @@ abstract class StreamingContractSpec extends AnyFunSuite {
 
   test("checkpoint resume: kill between micro-batches, restart, exactly-once output") {
     assertResumes(firstFs = None)
+  }
+
+  test("checkpoint resume with the keypass stream read from parquet") {
+    val games = FixtureGen.corpus(4, 100).filter(_.doc.source == "opta")
+    assert(games.exists(_.keypasses.nonEmpty), "fixture has keypasses")
+    assertResumes(firstFs = None, games = games, withKeypass = true)
   }
 
   test("a checkpoint written under Hadoop's stock LocalFs resumes under the " +
@@ -547,6 +640,9 @@ abstract class StreamingContractSpec extends AnyFunSuite {
       for (k <- Seq("addBatch", "walCommit", "commitOffsets", "triggerExecution"))
         assert((last \ "durationMs" \ k).extractOpt[Long].isDefined, s"durationMs.$k")
       assert((last \ "stateCommitMs").extractOpt[Long].isDefined)
+      val mem = json.map(j => (j \ "stateMemoryBytes").extractOpt[Long])
+      assert(mem.forall(_.isDefined), "stateMemoryBytes missing from a line")
+      assert(mem.flatten.exists(_ > 0L), s"stateMemoryBytes never > 0: $mem")
       assert((last \ "watermark").extractOpt[String].isDefined)
       assert(json.map(j => (j \ "inputRows").extract[Long]).sum == all.size + 1)
       assert(json.map(j => (j \ "lateRows").extract[Long]).sum == metrics.lateRows)
@@ -593,10 +689,10 @@ abstract class StreamingContractSpec extends AnyFunSuite {
   }
 
   test("stream multi-keypass rows: winner independent of delivery order") {
-    // one event with BOTH 'key' and 'assisst' outcome rows: the stream-
-    // stream join delivers two match rows; KpWinner precedence (not
-    // delivery order) must decide, and the result must equal the batch
-    // path, which dedups the collect_list the same way.
+    // one event with BOTH 'key' and 'assisst' outcome rows: the state
+    // keeps both; KpWinner precedence (not delivery order) must decide,
+    // and the result must equal the batch path, which dedups the
+    // collect_list the same way.
     val g0 = FixtureGen.corpus(4, 100)
       .find(x => x.doc.source == "opta" && x.keypasses.nonEmpty).get
     val k0 = g0.keypasses.head
@@ -613,14 +709,38 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     assert(gotB == truth, "stream (order B) != batch truth")
   }
 
+  /** A keypass row as [[SpadlStream.valuedActions]] folds it into the
+    * event stream. */
+  private def kpRow(doc: String, eventId: Int, passType: String,
+      ts: Long): SpadlStream.StreamEvent =
+    SpadlStream.StreamEvent(doc, "keypass", -1, -1, SpadlStream.KeypassSeq,
+      new Timestamp(ts), Array(eventId), Some(passType))
+
+  /** Runs `fn` as one micro-batch of a key: prior state, watermark and
+    * whether the call is the key's timeout; returns the output and state. */
+  private def callState(
+      fn: (String, Iterator[SpadlStream.StreamEvent],
+        org.apache.spark.sql.streaming.GroupState[SpadlStream.GameBuf]) =>
+        Iterator[ValuedAction],
+      key: String, rows: Seq[SpadlStream.StreamEvent],
+      prior: Option[SpadlStream.GameBuf], wm: Long, timedOut: Boolean = false)
+      : (Vector[ValuedAction],
+        org.apache.spark.sql.streaming.TestGroupState[SpadlStream.GameBuf]) = {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    val st = TestGroupState.create[SpadlStream.GameBuf](
+      prior.map(Optional.of[SpadlStream.GameBuf])
+        .getOrElse(Optional.empty[SpadlStream.GameBuf]()),
+      GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wm), timedOut)
+    (fn(key, rows.iterator, st).toVector, st)
+  }
+
   test("InStat state is bounded by game size and closes on timeout") {
     // InStat emits only on session close (quirk Q4 forces whole-frame
     // result attribution), so its state is O(game) per key — this pins the
     // bound: buffered rows never exceed the game's event count, duplicate
     // deliveries don't grow it, and the event-time timeout flushes the
     // full valued game and REMOVES the state.
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val g = FixtureGen.corpus(24, 200).find(_.doc.source == "instat").get
     val events = SpadlStream.toStreamEvents(g.doc, Base)
     val n = events.size
@@ -630,12 +750,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     var wm = 0L
     val slices = events.grouped(math.max(1, n / 4)).toSeq
     slices.foreach { slice =>
-      val st = TestGroupState.create[SpadlStream.GameBuf](
-        stateOpt.map(Optional.of[SpadlStream.GameBuf])
-          .getOrElse(Optional.empty[SpadlStream.GameBuf]()),
-        GroupStateTimeout.EventTimeTimeout, 0L,
-        Optional.of(wm), false)
-      val out = fn(g.doc.doc_id, slice.iterator, st).toVector
+      val (out, st) = callState(fn, g.doc.doc_id, slice, stateOpt, wm)
       assert(out.isEmpty, "instat must not emit before session close")
       assert(st.exists, "state must persist between batches")
       val buf = st.get
@@ -647,85 +762,59 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     assert(stateOpt.get.size == n) // all events buffered, none beyond
 
     // duplicate redelivery of a full slice: state must NOT grow
-    val stDup = TestGroupState.create[SpadlStream.GameBuf](
-      Optional.of(stateOpt.get), GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(wm), false)
-    assert(fn(g.doc.doc_id, slices.head.iterator, stDup).isEmpty)
+    val (dupOut, stDup) = callState(fn, g.doc.doc_id, slices.head, stateOpt, wm)
+    assert(dupOut.isEmpty)
     assert(stDup.get.size == n, "duplicate delivery grew the state")
 
     // timeout: full valued game flushes, state removed
-    val stTo = TestGroupState.create[SpadlStream.GameBuf](
-      Optional.of(stDup.get), GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(wm + 600001L), true)
-    val flushed = fn(g.doc.doc_id, Iterator.empty, stTo).toVector
+    val (flushed, stTo) = callState(fn, g.doc.doc_id, Nil, Some(stDup.get),
+      wm + 600001L, timedOut = true)
     assert(stTo.isRemoved, "state must be removed on session close")
     val truth = batchTruth(Seq(g))
     assert(flushed.sortBy(key) == truth.sortBy(key),
       s"timeout flush ${flushed.size} rows != batch truth ${truth.size}")
   }
 
-  test("undersized emission lag: a lost keypass upgrade increments the " +
-      "accumulator through the real query") {
-    // The production emission lag (40s) exceeds the stream-stream join's
-    // release bound, so upgrades always land while their event is still
-    // buffered — the keypass-join test asserts the counter stays 0. In
-    // fact Spark itself already delays the post-join operator's watermark
-    // by the join bound (getCurrentWatermarkMs = global wm - 30s - 1ms
-    // here), so even a ZERO lag cannot lose an in-window upgrade; the
-    // 40s lag is a second, engine-owned margin on top. To prove the
-    // margin break is OBSERVABLE (round-3 VERDICT #8), this test sets a
-    // NEGATIVE override — emitting ahead of the safe frontier the same
-    // way a mis-sized production lag would — and delivers a keypass at
-    // the join-window edge one batch after its event's region was
-    // emitted: the parity loss must land in the lostUpgrades
-    // accumulator, through the real streaming machinery (MemoryStream ->
-    // join -> watermark -> state), not a TestGroupState harness.
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
+  test("stateFn: an undersized lag counts a lost keypass") {
+    // With the production lag (KeypassWindowMs) a keypass that Spark
+    // accepts (time >= the previous watermark) can never match an emitted
+    // event. A lag of 0 emits the last 30 s below the watermark early; a
+    // keypass accepted just above that watermark then aims its window at
+    // the emitted region, and the accumulator must count it.
     val g = FixtureGen.corpus(4, 100).find(_.doc.source == "opta").get
-    val raw = SpadlStream.toStreamEvents(g.doc, Base)
-    // retime: event i at t = 5i seconds into period 1, preserving order
-    val events = raw.zipWithIndex.map { case (e, i) =>
-      val grp = e.group.clone()
-      grp(2) = 1; grp(3) = (5 * i) / 60; grp(4) = (5 * i) % 60
-      e.copy(group = grp, event_time = new Timestamp(Base + 5000L * i))
+    val events = SpadlStream.toStreamEvents(g.doc, Base)
+    val wm = events(events.size / 2).event_time.getTime
+    val target = events.filter(_.event_time.getTime < wm).last
+    val kp = kpRow(g.doc.doc_id, target.group(0), "key", wm + 5000L)
+    def lostWith(lagMs: Long): Long = {
+      val lost = spark.sparkContext.longAccumulator
+      val fn = SpadlStream.stateFn(600000L, lagMs, Some(lost)) _
+      val (out, st) = callState(fn, g.doc.doc_id, events, None, wm)
+      assert(lagMs > 0 || out.nonEmpty, "nothing emitted below the watermark")
+      callState(fn, g.doc.doc_id, Seq(kp), Some(st.get), wm)
+      lost.value
     }
-    val eIdx = 10 // target event E at t = 50s
-    val tE = 5L * eIdx
-    val targetEventId = events(eIdx).group(0)
-    val mem = MemoryStream[SpadlStream.StreamEvent]
-    val kpMem = MemoryStream[(String, Int, String, Timestamp)]
-    val kpDf = kpMem.toDS().toDF("doc_id", "event_id", "pass_type",
-      "event_time")
-    val lost = spark.sparkContext.longAccumulator("lost_upgrades_margin")
-    val out = SpadlStream.valuedActions(spark, mem.toDS(), Some(kpDf),
-      watermarkDelay = "60 seconds", sessionGap = "10 minutes",
-      lostUpgrades = Some(lost), emissionLagOverride = Some(-20000L))
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("stream_lost_upg").start()
-    try {
-      // batch 1: events up to t=135 plus a non-matching keypass row at
-      // t=135 — the GLOBAL watermark is the min over both inputs, so the
-      // kp side must advance too. Watermark after: 135 - 60 = 75s.
-      mem.addData(events.take(28))
-      kpMem.addData(("998", -1, "none", new Timestamp(Base + 135 * 1000L)))
-      q.processAllAvailable()
-      // batch 2: a duplicate re-delivery (idempotent, no wm change): the
-      // join releases the early region to the state operator, whose own
-      // watermark is the global 75s minus the 30s join bound; with the
-      // -20s lag it stores frontier = 75 - 30 + 20 = 65s > tE and emits
-      // E's region ahead of the safe bound.
-      mem.addData(Seq(events(27))); q.processAllAvailable()
-      assert(lost.value == 0L)
-      // batch 3: the upgrade at t = 77s — above the 75s global watermark
-      // (passes the late filter), inside E's join window (|77-50| <= 30),
-      // but BELOW the stored 65s emission frontier -> a lost upgrade
-      kpMem.addData((g.doc.doc_id, targetEventId, "key",
-        new Timestamp(Base + (tE + 27) * 1000L)))
-      q.processAllAvailable()
-      assert(lost.value >= 1L,
-        "below-frontier keypass upgrade was not counted")
-    } finally q.stop()
+    assert(lostWith(0L) == 1L, "keypass aimed at the emitted region not counted")
+    assert(lostWith(SpadlStream.KeypassWindowMs) == 0L)
+  }
+
+  test("stateFn: a keypass-only key emits nothing and closes on timeout") {
+    // a keypass can reach the state before any event of its doc, or for a
+    // doc with no events: the key keeps it, arms its session timeout from
+    // the keypass time and, on timeout, is removed without output
+    val fn = SpadlStream.stateFn(600000L, SpadlStream.KeypassWindowMs) _
+    val ts = Base + 90000L
+    val (out, st) = callState(fn, "4242", Seq(kpRow("4242", 17, "key", ts)),
+      None, Base)
+    assert(out.isEmpty)
+    assert(st.exists, "keypass-only key must keep its keypass")
+    assert(st.get.size == 0 && st.get.keypasses ==
+      Vector(SpadlStream.BufKp(17, ts, "key")))
+    assert(st.getTimeoutTimestampMs.get == ts + 600000L)
+    val (flushed, stTo) = callState(fn, "4242", Nil, Some(st.get),
+      ts + 600001L, timedOut = true)
+    assert(flushed.isEmpty)
+    assert(stTo.isRemoved, "keypass-only key must be removed on timeout")
   }
 
   test("sink co-location check: scattered duplicate keys fail loudly and " +

@@ -3,12 +3,49 @@
 run `sbt "runMain graft.Verify <sfDir> <outDir>"` first, then this script
 compares each <outDir>/<name> parquet against the oracle SQL executed by
 DuckDB over the same sf tables (columns sorted by name, rows sorted, values
-hashed), then lists the outputs that have no oracle entry (rows-only)."""
-import sys, json, glob, os
+hashed), then lists the outputs that have no oracle entry (rows-only).
+
+With `--against <otherOutDir>` (a Verify output of another commit) it also
+prints SAME/DIFF/MISSING for every Verify output of either directory, the
+rows-only ones included, comparing the same normalised, sorted rows by hash,
+and exits nonzero on any DIFF or MISSING:
+
+    python3 tools/check_oracle.py <sfDir> <outDir> --against <parentOutDir>
+"""
+import argparse, glob, hashlib, json, os, sys
 import duckdb
 
-sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify_out"
+ap = argparse.ArgumentParser()
+ap.add_argument("sfdir", help="scale-factor dir of the input parquet tables")
+ap.add_argument("outdir", help="graft.Verify output dir")
+ap.add_argument("--against", help="Verify output dir of another commit")
+args = ap.parse_args()
+sfdir, outdir = args.sfdir, args.outdir
+
+
+def cell(v):
+    # numpy values as Python ones: str() of a long array elides its middle
+    v = v.tolist() if hasattr(v, "tolist") else v
+    return "<NA>" if v is None or (isinstance(v, float) and v != v) else str(v)
+
+
+def cells(col):
+    """A column's values as strings: NaN/None as <NA>, floats and objects via
+    str, ints via astype(str) (dtype-kind mismatches are reported apart)."""
+    return col.map(cell) if col.dtype.kind in "fO" else col.astype(str)
+
+
+def norm_hash(df):
+    """sha256 of a frame's columns sorted by name (with their dtype kinds)
+    and its rows as cell strings, sorted."""
+    df = df.reindex(sorted(df.columns), axis=1)
+    h = hashlib.sha256()
+    h.update(repr([(c, df[c].dtype.kind) for c in df.columns]).encode())
+    strs = [cells(df[c]) for c in df.columns]
+    for row in sorted(zip(*strs)):
+        h.update("\x1f".join(row).encode() + b"\x1e")
+    return h.hexdigest()
+
 
 con = duckdb.connect()
 for p in glob.glob(f"{sfdir}/*.parquet"):
@@ -59,11 +96,7 @@ for name, sql in sorted(oracle.items()):
         if (ka in "iu") != (kb in "iu") or (ka == "f") != (kb == "f"):
             diffs.append(f"{c}: DTYPE oracle={a.dtype} mine={b.dtype}")
             continue
-        sa = a.map(lambda v: "<NA>" if v != v or v is None else str(v)) \
-            if ka in "fO" else a.astype(str)
-        sb = b.map(lambda v: "<NA>" if v != v or v is None else str(v)) \
-            if kb in "fO" else b.astype(str)
-        eq = sa == sb
+        eq = cells(a) == cells(b)
         if not eq.all():
             idx = (~eq).idxmax()
             diffs.append(f"{c}[{idx}]: oracle={a[idx]!r} mine={b[idx]!r}")
@@ -78,4 +111,24 @@ rows_only = sorted(os.path.basename(d.rstrip("/"))
                    for d in glob.glob(f"{outdir}/*/")
                    if os.path.basename(d.rstrip("/")) not in oracle)
 print(f"{len(rows_only)} rows-only outputs (no oracle): {' '.join(rows_only)}")
+
+if args.against:
+    def outputs(d):
+        return {os.path.basename(p.rstrip("/")) for p in glob.glob(f"{d}/*/")}
+    mine, other = outputs(outdir), outputs(args.against)
+    bad = 0
+    for name in sorted(mine | other):
+        if name not in mine or name not in other:
+            where = outdir if name not in mine else args.against
+            print(f"MISSING  {name} (not in {where})")
+            bad += 1
+            continue
+        ha, hb = (norm_hash(con.execute(
+            f"SELECT * FROM '{d}/{name}/*.parquet'").fetchdf())
+            for d in (outdir, args.against))
+        print(f"{'SAME' if ha == hb else 'DIFF':8} {name}")
+        bad += ha != hb
+    print(f"\n{len(mine | other) - bad}/{len(mine | other)} outputs SAME "
+          f"as {args.against}")
+    fail += bad
 sys.exit(1 if fail else 0)

@@ -2,7 +2,7 @@ package graft.convert
 
 import graft.codec.TokenCodec
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch decode+convert pipeline over the engine input table

@@ -156,10 +156,11 @@ object FixtureGen {
         else if (roll < 94) add(61, team, rnd.nextBoolean(), Vector.empty)
         else if (roll < 97) add(10, team, true, Vector.empty)
         else add(49, team, true, Vector.empty) // ball recovery -> non_action
+      // timed on the stream's event-time axis (SpadlStream.toStreamEvents)
       if (w.type_id == 1 && rnd.nextInt(10) == 0)
         keypasses += KeypassRow(s"$gameId", w.event_id,
           if (rnd.nextBoolean()) "key" else "assisst",
-          60.0 * w.minute + w.second)
+          3600.0 * (w.period_id - 1) + 60.0 * w.minute + w.second)
     }
 
     val tokens = TokenCodec.encodeOpta(home, events.toSeq)

@@ -115,6 +115,31 @@ final case class SpadlAction(
     keypass: Boolean
 )
 
+/** Atomic SPADL action ([[graft.convert.AtomicConvert.toAtomic]] output,
+  * SURVEY.md §2.9): results are reified as action types, positions are a
+  * start (x, y) plus a movement (dx, dy), and `atomic_idx` is the 1-based
+  * per-game ordinal.
+  */
+final case class AtomicAction(
+    game_id: Int,
+    event_id: Double,
+    action_idx: Int,
+    period_id: Int,
+    time_seconds: Double,
+    home_team_id: Int,
+    type_id: Int,
+    type_name: String,
+    player_id: Int,
+    team_id: Int,
+    x: Double,
+    y: Double,
+    dx: Double,
+    dy: Double,
+    bodypart_id: Int,
+    bodypart_name: String,
+    atomic_idx: Int
+)
+
 /** SPADL action enriched with model probabilities and VAEP values
   * (/root/reference/R/spadl.R:132-140).
   */

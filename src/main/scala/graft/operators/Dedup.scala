@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,7 +125,7 @@ object Dedup {
     // 64-bit word hashes come from md5 (60 bits from hex[1..15] + 4 from
     // hex[16]) so the DuckDB oracle replays the identical signature.
     QueryDef("q25_simhash",
-      (s, d) => simhashCandidates(s, T.load(s, d, "documents")),
+      (s, d) => simhashCandidates(T.load(s, d, "documents")),
       Some(simhashOracle)),
 
     // ---------------------------- n-gram Jaccard verification of candidates.
@@ -133,7 +133,7 @@ object Dedup {
     // minhash -> band -> bucket-join -> exact-Jaccard verify — is replayed
     // verbatim by the DuckDB oracle.
     QueryDef("q26_ngram_jaccard",
-      (s, d) => ngramJaccard(s, T.load(s, d, "documents")),
+      (s, d) => ngramJaccard(T.load(s, d, "documents")),
       Some(ngramJaccardOracle))
   )
 
@@ -248,8 +248,7 @@ object Dedup {
     * deterministic), instead of 64 interpreted array passes per doc; same
     * simhash values, ~whole-stage-compiled plan.
     */
-  def simhashCandidates(s: SparkSession, docs: DataFrame,
-      maxHamming: Int = 6): DataFrame = {
+  def simhashCandidates(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
     // hash once per VOCABULARY entry, not per occurrence: distinct words
     // are a tiny fraction of corpus tokens (heavy-tailed vocabulary), so
     // the md5 digests are computed on the deduped word dictionary (cached
@@ -325,15 +324,12 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Cross-engine word hash for the arithmetic MinHash: the first 15 hex
-    * digits of md5 parsed as an integer, mod HashM — ONE native expression
-    * per word on both engines (Spark `conv`, DuckDB `CAST('0x'||... )`),
-    * no per-char lambda loop (the nested char-fold's per-word array
+  /** DuckDB word hash for the arithmetic MinHash: the first 15 hex digits
+    * of md5 parsed as an integer, mod HashM — the `h1` of [[hashedDict]]
+    * mod HashM on the Spark side. One native expression per word, no
+    * per-char lambda loop (the nested char-fold's per-word array
     * allocations dominated q26's runtime).
     */
-  private def mdWordHash(w: Column): Column =
-    pmod(conv(substring(md5(w), 1, 15), 16, 10).cast("long"), lit(HashM))
-
   private def mdWordHashSql(e: String): String =
     s"(CAST('0x' || substring(md5($e), 1, 15) AS BIGINT) % $HashM)"
 
@@ -402,7 +398,7 @@ object Dedup {
     * stage); candidate pairs stay narrow through the distinct, shingle
     * arrays re-join after.
     */
-  def ngramJaccard(s: SparkSession, docs: DataFrame): DataFrame = {
+  def ngramJaccard(docs: DataFrame): DataFrame = {
     val cands = minhashCandidates(docs)
     // verify on the (bounded) candidate pairs with per-DOC distinct shingle
     // sets built ONCE via the same codegen window-lead shape as the

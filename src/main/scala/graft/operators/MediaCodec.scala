@@ -123,7 +123,7 @@ object MediaCodec extends Serializable {
   /** container layout: 4-byte magic | 1-byte frame count | n x 4-byte
     * big-endian frame offsets (from payload start) | PNG frames
     */
-  def encodeVideo(docId: Long, text: String, nFrames: Int): Array[Byte] = {
+  def encodeVideo(text: String, nFrames: Int): Array[Byte] = {
     require(nFrames > 0 && nFrames < 256, s"frame count $nFrames out of range")
     val frames = (0 until nFrames).map { f =>
       encodeFrame(FrameW, FrameH,

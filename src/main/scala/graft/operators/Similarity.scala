@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`embedding:
@@ -102,38 +102,24 @@ object Similarity {
       Some(cosineTopKSql("SELECT vec_id FROM embeddings"))),
 
     // ----------------------- centroid distance per label (IVF coarse step).
-    // Fully deterministic: the centroid is built from EXACT integer
-    // micro-sums (round(v*1e6) per component, integer-summed — order-free),
+    // Fully deterministic: the centroids are exact ([[labelCentroids]]),
     // and the per-point squared distance is integer-ized per ROW
     // (round(d2*1e8)) before the final integer sum, so no double
     // accumulation order can differ between engines.
     QueryDef("q34_label_centroid_dist",
       (s, d) => {
-        val e = T.load(s, d, "embeddings")
-        val exploded = e.select(col("vec_id"), col("label"),
-          posexplode(col("embedding")).as(Seq("pos", "v")))
-        val centroids = exploded.groupBy(col("label"), col("pos"))
-          .agg(sum(round(col("v").cast("double") * 1000000, 0).cast("long"))
-            .as("s6"), count(lit(1)).as("cnt"))
+        val (exploded, centroids) =
+          labelCentroids(T.load(s, d, "embeddings"))
         val vd = col("v").cast("double")
         exploded.join(broadcast(centroids), Seq("label", "pos"))
-          .withColumn("c", col("s6").cast("double") / (col("cnt") * lit(1000000.0)))
           .withColumn("d2e8",
             round((vd - col("c")) * (vd - col("c")) * 100000000, 0).cast("long"))
           .groupBy(col("label"))
           .agg(count(lit(1)).as("n_points"), sum(col("d2e8")).as("sum_d2_e8"))
           .orderBy(col("label"))
       },
-      Some("""WITH ex AS (SELECT label, vec_id,
-          unnest(embedding) AS v,
-          unnest(generate_series(0, len(embedding) - 1)) AS pos
-        FROM embeddings),
-      cen AS (SELECT label, pos,
-          CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT)) AS BIGINT) AS s6,
-          count(*) AS cnt
-        FROM ex GROUP BY label, pos),
-      j AS (SELECT ex.label, CAST(ex.v AS DOUBLE) AS vd,
-          s6 / (cnt * 1000000.0) AS c
+      Some(s"""WITH $labelCentroidsSql,
+      j AS (SELECT ex.label, CAST(ex.v AS DOUBLE) AS vd, c
         FROM ex JOIN cen ON ex.label = cen.label AND ex.pos = cen.pos)
       SELECT label, count(*) AS n_points,
         CAST(sum(CAST(round((vd - c) * (vd - c) * 100000000, 0) AS BIGINT)) AS BIGINT) AS sum_d2_e8
@@ -141,7 +127,7 @@ object Similarity {
 
     // -------------------- LSH random-hyperplane bucketing (ANN scale path)
     QueryDef("q35_ann_lsh_buckets",
-      (s, d) => lshBuckets(s, T.load(s, d, "embeddings")),
+      (s, d) => lshBuckets(T.load(s, d, "embeddings")),
       Some(lshBucketsOracle)),
 
     // -------------------- ANN probe: the bucketed SEARCH path — the query
@@ -179,7 +165,7 @@ object Similarity {
     // At 100 TB this is the scale path: one narrow signature projection,
     // one bounded bucket self-join — never an all-pairs block.
     QueryDef("q40_embedding_neardup",
-      (s, d) => neardupLsh(s, T.load(s, d, "embeddings")),
+      (s, d) => neardupLsh(T.load(s, d, "embeddings")),
       Some(neardupOracle)),
 
     // ------------- near-dup SURVIVOR selection (the dedup DECISION on top
@@ -194,7 +180,7 @@ object Similarity {
     QueryDef("q52_neardup_survivors",
       (s, d) => {
         val e = T.load(s, d, "embeddings")
-        val dropped = neardupLsh(s, e)
+        val dropped = neardupLsh(e)
           .select(col("vec_b").as("vec_id")).distinct()
         e.join(dropped, Seq("vec_id"), "left_anti")
           .groupBy(col("label"))
@@ -265,7 +251,7 @@ object Similarity {
     // exceeds 20 rounds; ROADMAP direction 1 holds the fix).
     QueryDef("q59_dedup_clusters",
       (s, d) => {
-        val pairs = neardupLsh(s, T.load(s, d, "embeddings"))
+        val pairs = neardupLsh(T.load(s, d, "embeddings"))
           .select(col("vec_a"), col("vec_b"))
         val labels = connectedComponents(pairs, "vec_a", "vec_b")
         labels.groupBy(col("lbl").as("cluster_id"))
@@ -502,7 +488,7 @@ object Similarity {
          |  THEN ${1L << p} ELSE 0 END)""".stripMargin
     }.mkString(" +\n")
 
-  def neardupLsh(s: SparkSession, e: DataFrame): DataFrame = {
+  def neardupLsh(e: DataFrame): DataFrame = {
     val bits = NdPlanes / NdBands
     val banded = intLshSignature(e, NdPlanes).select(col("vec_id").as("id"),
       explode(array((0 until NdBands).map { b =>
@@ -602,7 +588,7 @@ object Similarity {
     * [[lshBucketsOracle]]; at 100 TB the bucketed table would be WRITTEN
     * partitioned by `bucket` so probes are partition-pruned scans.
     */
-  def lshBuckets(s: SparkSession, e: DataFrame, nPlanes: Int = 8): DataFrame =
+  def lshBuckets(e: DataFrame, nPlanes: Int = 8): DataFrame =
     intLshSignature(e, nPlanes)
       .withColumnRenamed("sig", "bucket")
       .groupBy(col("bucket"))
@@ -635,19 +621,41 @@ object Similarity {
       .join(e, Seq("vec_id")), e, queryVecId, k)
   }
 
-  /** IVF search: coarse-quantize by label centroid (exact integer
-    * micro-sums, as q34), probe the `nprobe` nearest clusters to the query
-    * vector, exact-cosine top-k within them. See the q48 QueryDef note for
-    * the 100-TB layout.
+  /** The embeddings exploded to `(vec_id, label, pos, v)`, and each
+    * label's centroid `(label, pos, c)` built from EXACT integer micro-sums
+    * (round(v*1e6) per component, integer-summed — order-free) — the
+    * centroids of q34 and q48. [[labelCentroidsSql]] is its DuckDB twin.
     */
-  def ivfSearch(e: DataFrame, queryVecId: Long = 0, nprobe: Int = 2,
-      k: Int = 10): DataFrame = {
+  private def labelCentroids(e: DataFrame): (DataFrame, DataFrame) = {
     val exploded = e.select(col("vec_id"), col("label"),
       posexplode(col("embedding")).as(Seq("pos", "v")))
     val centroids = exploded.groupBy(col("label"), col("pos"))
       .agg(sum(round(col("v").cast("double") * 1000000, 0).cast("long"))
         .as("s6"), count(lit(1)).as("cnt"))
-      .withColumn("c", col("s6").cast("double") / (col("cnt") * lit(1000000.0)))
+      .select(col("label"), col("pos"),
+        (col("s6").cast("double") / (col("cnt") * lit(1000000.0))).as("c"))
+    (exploded, centroids)
+  }
+
+  /** DuckDB twin of [[labelCentroids]]: the CTEs `ex` and `cen`. */
+  private lazy val labelCentroidsSql: String =
+    """ex AS (SELECT label, vec_id,
+      |    unnest(embedding) AS v,
+      |    unnest(generate_series(0, len(embedding) - 1)) AS pos
+      |  FROM embeddings),
+      |cen AS (SELECT label, pos, s6 / (cnt * 1000000.0) AS c
+      |  FROM (SELECT label, pos,
+      |      CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT)) AS BIGINT) AS s6,
+      |      count(*) AS cnt
+      |    FROM ex GROUP BY label, pos))""".stripMargin
+
+  /** IVF search: coarse-quantize by label centroid (as q34), probe the
+    * `nprobe` nearest clusters to the query vector, exact-cosine top-k
+    * within them. See the q48 QueryDef note for the 100-TB layout.
+    */
+  def ivfSearch(e: DataFrame, queryVecId: Long = 0, nprobe: Int = 2,
+      k: Int = 10): DataFrame = {
+    val (exploded, centroids) = labelCentroids(e)
     val q = exploded.filter(col("vec_id") === queryVecId)
       .select(col("pos"), col("v").cast("double").as("qv"))
     // query-to-centroid distances, integer-ized per component (order-free),
@@ -665,19 +673,11 @@ object Similarity {
   /** DuckDB mirror of [[ivfSearch]] (query vec 0, nprobe 2, k 10). */
   private lazy val ivfSearchOracle: String =
     cosineTopKSql("SELECT vec_id FROM embeddings JOIN top USING (label)",
-      """ex AS (SELECT label, vec_id,
-       |    unnest(embedding) AS v,
-       |    unnest(generate_series(0, len(embedding) - 1)) AS pos
-       |  FROM embeddings),
-       |cen AS (SELECT label, pos,
-       |    CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT)) AS BIGINT) AS s6,
-       |    count(*) AS cnt
-       |  FROM ex GROUP BY label, pos),
-       |cj AS (SELECT label, pos, s6 / (cnt * 1000000.0) AS c FROM cen),
-       |qv AS (SELECT pos, CAST(v AS DOUBLE) AS qv FROM ex WHERE vec_id = 0),
+      labelCentroidsSql,
+      """qv AS (SELECT pos, CAST(v AS DOUBLE) AS qv FROM ex WHERE vec_id = 0),
        |qd AS (SELECT label,
        |    CAST(sum(CAST(round((qv - c) * (qv - c) * 100000000, 0) AS BIGINT)) AS BIGINT) AS qd2
-       |  FROM cj JOIN qv USING (pos) GROUP BY label),
+       |  FROM cen JOIN qv USING (pos) GROUP BY label),
        |top AS (SELECT label FROM qd ORDER BY qd2, label LIMIT 2)""".stripMargin)
 
   /** DuckDB mirror of [[annProbe]] (query vec 0, k = 10, 8 planes,

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.convert.SpadlPipeline
-import SpadlPipeline.{Kp}
 import graft.features.Features
 import graft.fixtures.FixtureGen
 import graft.vaep.Valuation

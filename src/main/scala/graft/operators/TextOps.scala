@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
@@ -55,7 +55,7 @@ object TextOps {
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .mapPartitions(_.map { case (id, text) =>
-          val video = MediaCodec.encodeVideo(id, text, nFrames = 4)
+          val video = MediaCodec.encodeVideo(text, nFrames = 4)
           val (total, sampled, checksum) = MediaCodec.sampleVideo(video, stride = 2)
           (id, MediaCodec.hex8(video).take(8), total, sampled, checksum)
         })

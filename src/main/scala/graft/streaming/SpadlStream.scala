@@ -420,10 +420,9 @@ object SpadlStream {
   /** Possession sessionization (W10): built-in session windows — actions
     * of the same (doc, team) within a 10 s gap form one possession.
     */
-  def possessions(spark: SparkSession, events: Dataset[StreamEvent],
+  def possessions(events: Dataset[StreamEvent],
       watermarkDelay: String = "10 seconds",
       gap: String = "10 seconds"): DataFrame = {
-    import spark.implicits._
     val teamCol = when(col("provider") === TokenCodec.ProviderOpta,
       element_at(col("group"), 7)) // OptaWire.team_id
       .otherwise(element_at(col("group"), 4)) // InstatWire.team_id

@@ -20,10 +20,10 @@ import org.apache.spark.sql.SparkSession
   * `file:` checkpoint they too run on the [[ForkFreeLocalFs]] binding that
   * [[StreamJob.start]] sets.
   *
-  * Selection knob: `GRAFT_STATE=rocksdb` (RunStream) or an
-  * explicit conf. The provider is a per-QUERY setting read at stream
-  * start from the session conf, so it composes with an existing
-  * SparkSession via `spark.conf.set` — no context restart needed.
+  * Selection: set [[RocksDBConfs]] on the session, with `spark.conf.set`
+  * or as `--conf` options of `spark-submit` for `SubmitMain`. The provider
+  * is a per-QUERY setting read at stream start from the session conf, so
+  * it composes with an existing SparkSession — no context restart needed.
   */
 object StateStores {
   val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
@@ -65,20 +65,8 @@ object StateStores {
     // memory / state partitions per executor.
     "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "256")
 
-  /** confs selected by the GRAFT_STATE env knob ("rocksdb" or unset/hdfs). */
-  def envConfs: Map[String, String] =
-    sys.env.get("GRAFT_STATE") match {
-      case Some("rocksdb") => RocksDBConfs
-      case _ => Map.empty
-    }
-
   /** human-readable name of the provider a session would use now. */
   def active(spark: SparkSession): String =
     if (spark.conf.getOption(ProviderConf).contains(RocksDBProvider)) "rocksdb"
     else "hdfs-heap"
-
-  def applyEnv(spark: SparkSession): SparkSession = {
-    envConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark
-  }
 }

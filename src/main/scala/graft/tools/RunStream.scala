@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.fixtures.FixtureGen
-import graft.streaming.{ExactlyOnceSink, SpadlStream, StateStores, StreamJob}
+import graft.streaming.{ExactlyOnceSink, SpadlStream, StreamJob}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -28,7 +28,6 @@ object RunStream {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    StateStores.applyEnv(spark) // GRAFT_STATE=rocksdb selects RocksDB state
     import spark.implicits._
 
     val Base = 1704067200000L

@@ -275,7 +275,7 @@ class AtomicAndPlanSpec extends AnyFunSuite {
     // cluster of size >= 3 (a transitive chain — the case q52's
     // non-transitive keep-first rule cannot represent)
     val dir = "/root/testdata/sf0.001"
-    val pairs = graft.operators.Similarity.neardupLsh(spark,
+    val pairs = graft.operators.Similarity.neardupLsh(
         graft.operators.T.load(spark, dir, "embeddings"))
       .select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val clusters = SparkEntry.queries("q59_dedup_clusters")(spark, dir)

@@ -1,13 +1,16 @@
 package graft
 
+import graft.convert.{AtomicConvert, SpadlPipeline}
+import graft.fixtures.FixtureGen
+import graft.model.AtomicAction
 import graft.vaep.AtomicValuation
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Atomic VAEP semantics: reified goal types drive the goalscore and the
   * prev-zeroing, the team-aware delta swaps scores/concedes on change of
-  * possession, and the plan keeps the standard path's one-exchange shape.
+  * possession, the DataFrame entry point equals the per-game core bitwise,
+  * and the plan keeps the standard path's one-exchange shape.
   */
 class AtomicValuationSpec extends AnyFunSuite {
 
@@ -85,7 +88,38 @@ class AtomicValuationSpec extends AnyFunSuite {
     assert(r2.getAs[Double]("offensive_value") == r2.getAs[Double]("scores"))
   }
 
-  test("plan: atomic valuation windows share ONE exchange by game") {
+  test("DataFrame atomic valuation == per-game core, bitwise, any partitioning") {
+    import spark.implicits._
+    val actions = FixtureGen.corpus(6, 100).flatMap { g =>
+      SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens,
+        g.keypasses.map(k => SpadlPipeline.Kp(k.event_id, k.pass_type)))
+    }
+    val atomic = AtomicConvert.toAtomic(spark.createDataset(actions).toDF())
+      .as[AtomicAction].collect().toSeq
+    assert(atomic.map(_.game_id).distinct.size == 6)
+    val truth = atomic.groupBy(_.game_id).values.flatMap(as =>
+        AtomicValuation.valueGame(as.sortBy(_.atomic_idx)))
+      .toSeq.sortBy { case (a, _) => (a.game_id, a.atomic_idx) }
+    for (parts <- Seq(1, 7)) {
+      val got = AtomicValuation.value(
+          spark.createDataset(atomic).toDF().repartition(parts))
+        .collect().toSeq
+        .sortBy(r => (r.getAs[Int]("game_id"), r.getAs[Int]("atomic_idx")))
+      assert(got.size == truth.size)
+      got.zip(truth).foreach { case (r, (a, v)) =>
+        val at = s"(${a.game_id},${a.atomic_idx}) parts=$parts"
+        assert(r == Row.fromSeq(a.productIterator.toSeq ++
+          v.productIterator.toSeq), at)
+        // bitwise: compare raw double bits, not approximate equality
+        v.productIterator.zipWithIndex.foreach { case (d: Double, i) =>
+          assert(java.lang.Double.doubleToLongBits(d) ==
+            java.lang.Double.doubleToLongBits(r.getDouble(17 + i)), at)
+        }
+      }
+    }
+  }
+
+  test("plan: atomic valuation shares the conversion's ONE exchange by game") {
     import spark.implicits._
     val games = graft.fixtures.FixtureGen.corpus(4, 80)
     val actions = graft.convert.SpadlPipeline.convert(spark,

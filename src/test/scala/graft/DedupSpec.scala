@@ -61,7 +61,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("near-duplicate pair verifies above the Jaccard threshold") {
-    val out = Dedup.ngramJaccard(spark, corpus)
+    val out = Dedup.ngramJaccard(corpus)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(out.get((0L, 1L)).contains(1.0), s"exact pair jaccard != 1: $out")
     // one-word edit over ~23 words: 3 shingles differ of ~21
@@ -78,7 +78,7 @@ class DedupSpec extends AnyFunSuite {
     // more than maxHamming bits (vote margins are O(1) at this vocabulary
     // size), so near-dup recall is only asserted for exact duplicates here;
     // SimHash's sweet spot is large-vocabulary documents.
-    val out = Dedup.simhashCandidates(spark, corpus)
+    val out = Dedup.simhashCandidates(corpus)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getAs[Number](2).longValue))
       .toMap
@@ -99,7 +99,7 @@ class DedupSpec extends AnyFunSuite {
     val sig = Similarity.intLshSignature(e, 16)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sig(0L) == sig(1L), "identical vectors must share the signature")
-    val pairs = Similarity.neardupLsh(spark, e)
+    val pairs = Similarity.neardupLsh(e)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs.get((0L, 1L)).contains(1.0), s"exact pair cosine != 1: $pairs")
   }

@@ -6,11 +6,10 @@ import scala.jdk.CollectionConverters._
 
 /** Regression guard against env-var switches in the engine and its tests.
   * Environment reads belong to the entry points that size a run (`Bench`,
-  * `Verify`, `SubmitMain`) and to the state-store provider selection;
-  * anywhere else an env switch is hidden configuration that no test or
-  * benchmark sets, and in Scala 2.13 each `sys.env` call also copies the
-  * whole environment into a new Map, which costs real time on a per-key or
-  * per-row path. Tests get no env switches either: a test's behaviour is
+  * `Verify`, `SubmitMain`); anywhere else an env switch is hidden
+  * configuration that no test or benchmark sets, and in Scala 2.13 each
+  * `sys.env` call also copies the whole environment into a new Map, which
+  * costs real time on a per-key or per-row path. Tests get no env switches either: a test's behaviour is
   * fixed by its source. This file is allow-listed only for the mentions in
   * this comment and in the pattern below.
   */
@@ -20,7 +19,6 @@ class EnvReadSpec extends AnyFunSuite {
   private val allowed = Set(
     "main/scala/graft/Bench.scala", "main/scala/graft/Verify.scala",
     "main/scala/graft/SubmitMain.scala",
-    "main/scala/graft/streaming/StateStores.scala",
     "test/scala/graft/EnvReadSpec.scala")
   private val envRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
 

@@ -38,7 +38,7 @@ class MediaSpec extends AnyFunSuite {
 
   test("video container: stride sampling decodes only the sampled frames") {
     val text = "abcdefghijklmnopqrstuvwxyz"
-    val video = MediaCodec.encodeVideo(7L, text, nFrames = 4)
+    val video = MediaCodec.encodeVideo(text, nFrames = 4)
     assert(MediaCodec.hex8(video).take(8) == "47524656") // "GRFV"
     val (n, sampled, checksum) = MediaCodec.sampleVideo(video, stride = 2)
     val expect = Seq(0, 2).map { f =>

@@ -252,6 +252,22 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("period-2 keypasses match their events on the stream's time axis") {
+    // games this long reach the second half, whose events the stream times
+    // (period - 1) * 3600 s + 60 * minute + second
+    val games = FixtureGen.corpus(4, 400).filter(_.doc.source == "opta")
+    val truth = batchTruth(games).sortBy(key)
+    assert(truth.exists(a => a.period_id == 2 && (a.keypass || a.assist)),
+      "fixture must hold a period-2 keypass")
+    val lost = spark.sparkContext.longAccumulator("lost_kp_upgrades")
+    val got = runStream(games, 6, withKeypass = true,
+      sessionGap = SpadlStream.DefaultSessionGap,
+      lostUpgrades = Some(lost)).sortBy(key)
+    assert(got.size == truth.size)
+    got.zip(truth).foreach { case (a, b) => assert(a == b, s"${key(a)}") }
+    assert(lost.value == 0L, s"lost keypass upgrades: ${lost.value}")
+  }
+
   test("duplicate deliveries are idempotent; late rows are dropped") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -368,7 +384,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, Base))
       .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
     val mem = MemoryStream[SpadlStream.StreamEvent]
-    val q = SpadlStream.possessions(spark, mem.toDS())
+    val q = SpadlStream.possessions(mem.toDS())
       .writeStream.outputMode("append")
       .format("memory").queryName("poss_out").start()
     try {
